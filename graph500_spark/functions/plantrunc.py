@@ -35,15 +35,10 @@ re-exposed to the stats pathology at extreme round counts.
 
 from __future__ import annotations
 
-import os
 import warnings
 
 from pyspark.sql import DataFrame
 
-# A/B knob: SPARK_GRAFT_PLANTRUNC=off degrades to the plain eager
-# localCheckpoint (stats propagated) so the rewrap's cost/benefit can be
-# measured in isolation — used by tools/ab_plantrunc.py; never set it in
-# long-running loops (reintroduces the BigInteger stats blowup).
 _warned_fallback = False
 
 
@@ -53,8 +48,6 @@ def truncate_plan(df: DataFrame, eager: bool = True) -> DataFrame:
     ``df.localCheckpoint(eager=True)`` in iterative loops; chainable
     as ``df.transform(truncate_plan)``."""
     ck = df.localCheckpoint(eager=eager)
-    if os.environ.get("SPARK_GRAFT_PLANTRUNC", "") == "off":
-        return ck
     try:
         spark = ck.sparkSession
         jrdd = ck._jdf.queryExecution().toRdd()

@@ -18,7 +18,7 @@ translation of the reference's α/β direction heuristics
 
 Scale notes:
   * The per-level join shuffles on src; pre-partitioning the edge table
-    by src (``repartition("src")`` + persist, done in ``bfs``) makes
+    by src (``repartition("src")`` + persist, done in the level loop) makes
     every level reuse that exchange — only the (small) frontier moves.
   * ``localCheckpoint`` every level cuts the lineage chain that
     otherwise grows linearly with depth (the classic iterative-Spark
@@ -26,6 +26,14 @@ Scale notes:
   * The visited set stays distributed; the only driver-side value per
     level is the frontier count (the reference allreduces nq_size the
     same way, bfs.hpp:1163).
+
+One level loop, ``_bfs_levels``, serves every traversal here. Its
+``key`` list names the columns that tell independent traversals apart:
+``[]`` for single-root ``bfs`` (state is keyed by vertex alone) and
+``["root"]`` for batched ``bfs_multi`` (state keyed by (root,
+vertex), so the roots share each level's job but never interact).
+Every join, anti-join and dedup runs on ``[*key, "vertex"]``, so the
+single-root plan carries no constant key column.
 """
 
 from __future__ import annotations
@@ -33,14 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from graph500_spark.functions.plantrunc import (
-    truncate_plan,
-    truncate_plan_lazy,
-)
-from graph500_spark.functions.confscope import (
-    acquire_scoped_conf,
-    release_scoped_conf,
-)
+from graph500_spark.functions.plantrunc import truncate_plan_lazy
+from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.sizing import resolve_shuffle_partitions
 
 PRED_SCHEMA = T.StructType(
@@ -50,6 +52,118 @@ PRED_SCHEMA = T.StructType(
         T.StructField("depth", T.IntegerType(), True),
     ]
 )
+
+MULTI_PRED_SCHEMA = T.StructType(
+    [T.StructField("root", T.LongType(), False), *PRED_SCHEMA.fields]
+)
+
+MULTI_DEPTH_SCHEMA = T.StructType(
+    [
+        T.StructField("root", T.LongType(), False),
+        T.StructField("vertex", T.LongType(), False),
+        T.StructField("depth", T.IntegerType(), True),
+    ]
+)
+
+
+def _bfs_levels(
+    spark: SparkSession,
+    edges_clean: DataFrame,
+    seeds: list[tuple],
+    schema: T.StructType,
+    key: list[str],
+    with_pred: bool,
+    max_depth: int | None,
+    prepartition: bool,
+    shuffle_partitions: int | str | None,
+    broadcast_rows: int,
+    edge_count: int | None,
+) -> DataFrame:
+    """The level-synchronous loop behind ``bfs`` and ``bfs_multi``:
+    ``seeds`` are the depth-0 rows in ``schema`` order, ``key`` the
+    traversal-identifying columns (module docstring). Returns the
+    reached rows, a lazy union of the counted per-level frontiers."""
+    cols = [*key, "vertex"]
+    pred_col = [F.col("src").alias("pred")] if with_pred else []
+
+    def dedup(df: DataFrame) -> DataFrame:
+        # pred-free callers need only the level sets, which do not
+        # depend on the parent tie-break
+        if not with_pred:
+            return df.dropDuplicates(cols)
+        return df.groupBy(*cols).agg(F.min("pred").alias("pred"))
+
+    edges = edges_clean.select("src", "dst")
+    if prepartition:
+        edges = edges.repartition("src").persist()
+    try:
+        sp_override = resolve_shuffle_partitions(
+            spark,
+            shuffle_partitions,
+            edge_count,
+            edges.count if prepartition else None,
+        )
+        with scoped_session_confs(
+            spark, {"spark.sql.shuffle.partitions": sp_override}
+        ):
+            frontier = spark.createDataFrame(seeds, schema=schema).transform(
+                truncate_plan_lazy
+            )
+            reached = frontier
+            depth = 0
+            n_frontier = n_reached = len(seeds)
+            while max_depth is None or depth < max_depth:
+                depth += 1
+                # One logical step: frontier ⋈ adjacency → candidate
+                # (dst, src), keep min(src) per dst, drop already-reached.
+                frontier_side = frontier.select(
+                    *key, F.col("vertex").alias("src")
+                )
+                if n_frontier <= broadcast_rows:
+                    frontier_side = F.broadcast(frontier_side)
+                reached_side = reached.select(*cols)
+                if n_reached <= broadcast_rows:
+                    reached_side = F.broadcast(reached_side)
+                candidates = edges.join(frontier_side, "src").select(
+                    *key, F.col("dst").alias("vertex"), *pred_col
+                )
+                # Join order depends on whether `reached` broadcasts:
+                #  * broadcastable → anti-join FIRST: candidates pointing
+                #    at already-reached vertices (the majority on hub
+                #    levels) die map-side, and only genuinely-new ones
+                #    enter the groupBy shuffle;
+                #  * too big to broadcast → groupBy FIRST: the partial
+                #    (map-side) min-aggregation collapses duplicate dsts
+                #    before the shuffle, and the shuffled anti-join then
+                #    reuses the groupBy's hash partitioning on vertex.
+                if n_reached <= broadcast_rows:
+                    candidates = dedup(
+                        candidates.join(reached_side, cols, "left_anti")
+                    )
+                else:
+                    candidates = dedup(candidates).join(
+                        reached_side, cols, "left_anti"
+                    )
+                candidates = candidates.withColumn("depth", F.lit(depth))
+                # localCheckpoint makes the frontier a LEAF plan: without
+                # it every level's plan tree embeds the previous level's
+                # twice (join + anti-join) — exponential plan-tree growth
+                # that overflows the JVM stack on deep graphs (persist()
+                # alone does not truncate the logical plan). The LAZY form
+                # fuses the materialization into the count below — one
+                # driver barrier per level instead of two (guide §1.2/§5).
+                new_frontier = candidates.transform(truncate_plan_lazy)
+                n_new = new_frontier.count()
+                if n_new == 0:
+                    break
+                reached = reached.unionByName(new_frontier)
+                n_frontier = n_new
+                n_reached += n_new
+                frontier = new_frontier
+    finally:
+        if prepartition:
+            edges.unpersist()
+    return reached
 
 
 def bfs(
@@ -65,9 +179,11 @@ def bfs(
     """BFS from ``root`` over a symmetrized, deduped edge list.
 
     Returns [vertex, pred, depth] for every *reached* vertex
-    (root has pred == root, depth == 0 — the spec convention,
-    /root/reference/mpi/validate.hpp:530). Unreached vertices are simply
-    absent (≈ the reference's -1 entries).
+    (root has pred == root, depth == 0 — the spec convention, the
+    reference's mpi/validate.hpp:530). Unreached vertices are simply
+    absent (≈ the reference's -1 entries). ``max_depth`` truncates the
+    traversal at that level (the k-fold join chain a SQL oracle can
+    unroll).
 
     ``shuffle_partitions`` overrides spark.sql.shuffle.partitions for
     the duration of the loop (restored after): per-level shuffles are
@@ -99,109 +215,19 @@ def bfs(
     frontier → map-side join against the stationary edge table; huge
     frontier (cluster scale) → fall back to shuffle join automatically.
     """
-    edges = edges_clean.select("src", "dst")
-    if prepartition:
-        edges = edges.repartition("src").persist()
-
-    sp_override = resolve_shuffle_partitions(
+    return _bfs_levels(
         spark,
-        shuffle_partitions,
-        edge_count,
-        edges.count if prepartition else None,
+        edges_clean,
+        [(int(root), int(root), 0)],
+        PRED_SCHEMA,
+        key=[],
+        with_pred=True,
+        max_depth=max_depth,
+        prepartition=prepartition,
+        shuffle_partitions=shuffle_partitions,
+        broadcast_rows=broadcast_rows,
+        edge_count=edge_count,
     )
-    saved_sp = None
-    if sp_override is not None:
-        # lock + set: conf scoping serializes across driver threads
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", sp_override
-        )
-
-    frontier = spark.createDataFrame(
-        [(int(root), int(root), 0)], schema=PRED_SCHEMA
-    ).transform(truncate_plan_lazy)
-    reached = frontier
-    depth = 0
-    n_frontier = 1
-    n_reached = 1
-
-    try:
-        while True:
-            if max_depth is not None and depth >= max_depth:
-                break
-            depth += 1
-            # One logical step: frontier ⋈ adjacency → candidate
-            # (dst, src), keep min(src) per dst, drop already-reached.
-            frontier_side = frontier.select(F.col("vertex").alias("src"))
-            if n_frontier <= broadcast_rows:
-                frontier_side = F.broadcast(frontier_side)
-            reached_side = reached.select("vertex")
-            if n_reached <= broadcast_rows:
-                reached_side = F.broadcast(reached_side)
-            # Join order depends on whether `reached` broadcasts:
-            #  * broadcastable → anti-join FIRST: candidates pointing
-            #    at already-reached vertices (the majority on hub
-            #    levels) die map-side, and only genuinely-new ones
-            #    enter the groupBy shuffle;
-            #  * too big to broadcast → groupBy FIRST: the partial
-            #    (map-side) min-aggregation collapses duplicate dsts
-            #    before the shuffle, and the shuffled anti-join then
-            #    reuses the groupBy's hash partitioning on vertex.
-            candidates = edges.join(frontier_side, "src").select(
-                F.col("dst").alias("vertex"), F.col("src").alias("pred")
-            )
-            if n_reached <= broadcast_rows:
-                candidates = (
-                    candidates.join(reached_side, "vertex", "left_anti")
-                    .groupBy("vertex")
-                    .agg(F.min("pred").alias("pred"))
-                )
-            else:
-                candidates = (
-                    candidates.groupBy("vertex")
-                    .agg(F.min("pred").alias("pred"))
-                    .join(reached_side, "vertex", "left_anti")
-                )
-            candidates = candidates.withColumn("depth", F.lit(depth))
-            # localCheckpoint makes the frontier a LEAF plan: without
-            # it every level's plan tree embeds the previous level's
-            # twice (join + anti-join) — exponential plan-tree growth
-            # that overflows the JVM stack on deep graphs (persist()
-            # alone does not truncate the logical plan). The LAZY form
-            # fuses the materialization into the count below — one
-            # driver barrier per level instead of two (guide §1.2/§5).
-            new_frontier = candidates.transform(truncate_plan_lazy)
-            n_new = new_frontier.count()
-            if n_new == 0:
-                break
-            reached = reached.unionByName(new_frontier)
-            n_frontier = n_new
-            n_reached += n_new
-            frontier = new_frontier
-    finally:
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
-        )
-        if prepartition:
-            edges.unpersist()
-    return reached
-
-
-MULTI_PRED_SCHEMA = T.StructType(
-    [
-        T.StructField("root", T.LongType(), False),
-        T.StructField("vertex", T.LongType(), False),
-        T.StructField("pred", T.LongType(), True),
-        T.StructField("depth", T.IntegerType(), True),
-    ]
-)
-
-MULTI_DEPTH_SCHEMA = T.StructType(
-    [
-        T.StructField("root", T.LongType(), False),
-        T.StructField("vertex", T.LongType(), False),
-        T.StructField("depth", T.IntegerType(), True),
-    ]
-)
 
 
 def bfs_multi(
@@ -242,120 +268,22 @@ def bfs_multi(
     Same join-strategy heuristics as ``bfs``, with counts summed over
     the batch: the broadcast decision is about total bytes moved, not
     per-root logical size."""
-    edges = edges_clean.select("src", "dst")
-    if prepartition:
-        edges = edges.repartition("src").persist()
-
-    sp_override = resolve_shuffle_partitions(
-        spark,
-        shuffle_partitions,
-        edge_count,
-        edges.count if prepartition else None,
-    )
-    saved_sp = None
-    if sp_override is not None:
-        # lock + set: conf scoping serializes across driver threads
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", sp_override
-        )
-
     if with_pred:
-        frontier = spark.createDataFrame(
-            [(int(r), int(r), int(r), 0) for r in roots],
-            schema=MULTI_PRED_SCHEMA,
-        ).transform(truncate_plan_lazy)
+        seeds = [(int(r), int(r), int(r), 0) for r in roots]
     else:
-        frontier = spark.createDataFrame(
-            [(int(r), int(r), 0) for r in roots],
-            schema=MULTI_DEPTH_SCHEMA,
-        ).transform(truncate_plan_lazy)
-    reached = frontier
-    depth = 0
-    n_frontier = len(roots)
-    n_reached = len(roots)
-
-    try:
-        while True:
-            if max_depth is not None and depth >= max_depth:
-                break
-            depth += 1
-            frontier_side = frontier.select(
-                "root", F.col("vertex").alias("src")
-            )
-            if n_frontier <= broadcast_rows:
-                frontier_side = F.broadcast(frontier_side)
-            reached_side = reached.select("root", "vertex")
-            if n_reached <= broadcast_rows:
-                reached_side = F.broadcast(reached_side)
-            if with_pred:
-                candidates = edges.join(frontier_side, "src").select(
-                    "root",
-                    F.col("dst").alias("vertex"),
-                    F.col("src").alias("pred"),
-                )
-                if n_reached <= broadcast_rows:
-                    candidates = (
-                        candidates.join(
-                            reached_side, ["root", "vertex"], "left_anti"
-                        )
-                        .groupBy("root", "vertex")
-                        .agg(F.min("pred").alias("pred"))
-                    )
-                else:
-                    candidates = (
-                        candidates.groupBy("root", "vertex")
-                        .agg(F.min("pred").alias("pred"))
-                        .join(reached_side, ["root", "vertex"], "left_anti")
-                    )
-            else:
-                candidates = edges.join(frontier_side, "src").select(
-                    "root", F.col("dst").alias("vertex")
-                )
-                if n_reached <= broadcast_rows:
-                    candidates = candidates.join(
-                        reached_side, ["root", "vertex"], "left_anti"
-                    ).dropDuplicates(["root", "vertex"])
-                else:
-                    candidates = candidates.dropDuplicates(
-                        ["root", "vertex"]
-                    ).join(reached_side, ["root", "vertex"], "left_anti")
-            candidates = candidates.withColumn("depth", F.lit(depth))
-            # lazy checkpoint + count = one driver barrier per level
-            new_frontier = candidates.transform(truncate_plan_lazy)
-            n_new = new_frontier.count()
-            if n_new == 0:
-                break
-            reached = reached.unionByName(new_frontier)
-            n_frontier = n_new
-            n_reached += n_new
-            frontier = new_frontier
-    finally:
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
-        )
-        if prepartition:
-            edges.unpersist()
-    return reached
-
-
-def bfs_fixed_depth(
-    spark: SparkSession,
-    edges_clean: DataFrame,
-    root: int,
-    k: int,
-    prepartition: bool = True,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """BFS truncated at depth k — the SQL-expressible form (a k-fold
-    join chain the DuckDB oracle reproduces exactly). Same per-level
-    semantics as ``bfs`` (min-parent, first level wins)."""
-    return bfs(
+        seeds = [(int(r), int(r), 0) for r in roots]
+    return _bfs_levels(
         spark,
         edges_clean,
-        root,
-        max_depth=k,
+        seeds,
+        MULTI_PRED_SCHEMA if with_pred else MULTI_DEPTH_SCHEMA,
+        key=["root"],
+        with_pred=with_pred,
+        max_depth=max_depth,
         prepartition=prepartition,
         shuffle_partitions=shuffle_partitions,
+        broadcast_rows=broadcast_rows,
+        edge_count=edge_count,
     )
 
 

@@ -58,10 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graph500_spark.operators.text import TOKEN_REGEX
-from graph500_spark.functions.confscope import (
-    acquire_scoped_conf,
-    release_scoped_conf,
-)
+from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import truncate_plan
 
 END_OF_WORD = "</w>"
@@ -145,12 +142,8 @@ def bpe_learn(
     # scoped down with it, derived from the word-table volume the
     # driver measures once (the s24 ~2M-rows-per-partition rule, pair
     # rows ≈ a few × distinct words) — amortized over every round.
-    # Both settings restored in finally.
+    # Both settings are restored when the scope exits.
     n_words = words.count()
-    # lock + set: conf scoping serializes across driver threads
-    saved_aqe = acquire_scoped_conf(
-        spark, "spark.sql.adaptive.enabled", "false"
-    )
     loop_sp = max(
         4,
         min(
@@ -158,10 +151,11 @@ def bpe_learn(
             n_words // 500_000 + 4,
         ),
     )
-    saved_sp = acquire_scoped_conf(
-        spark, "spark.sql.shuffle.partitions", loop_sp
-    )
-    try:
+    loop_confs = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": loop_sp,
+    }
+    with scoped_session_confs(spark, loop_confs):
         for rank in range(num_merges):
             pairs = (
                 words.select(
@@ -194,13 +188,7 @@ def bpe_learn(
             if (rank + 1) % checkpoint_every == 0:
                 words = words.transform(truncate_plan)
         words = words.transform(truncate_plan)
-    finally:
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
-        )
-        release_scoped_conf(
-            spark, "spark.sql.adaptive.enabled", saved_aqe
-        )
+
     merges_df = spark.createDataFrame(
         merges,
         "rank: int, left: string, right: string, merged: string,"

@@ -33,10 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from graph500_spark.functions.confscope import (
-    acquire_scoped_conf,
-    release_scoped_conf,
-)
+from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import (
     truncate_plan,
     truncate_plan_lazy,
@@ -52,7 +49,6 @@ def betweenness_sampled(
     max_depth: int = 32,
     shuffle_partitions: int | None = None,
     broadcast_rows: int = 2_000_000,
-    keep_pairs: bool = True,
 ) -> DataFrame:
     """[vertex, bc_q] — betweenness contribution sums (micro-units)
     over the sampled roots, excluding each root's own row (Brandes
@@ -66,12 +62,9 @@ def betweenness_sampled(
     under ``broadcast_rows``; past that the joins degrade to shuffle
     joins (the bfs.py discipline).
     """
-    saved_sp = None
-    if shuffle_partitions is not None:
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", shuffle_partitions
-        )
-    try:
+    with scoped_session_confs(
+        spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
+    ):
         edges = edges_clean.select("src", "dst").persist()
         # ---- forward: depths + exact path counts per (root, vertex)
         frontier = spark.createDataFrame(
@@ -106,7 +99,7 @@ def betweenness_sampled(
         # the pairs are not kept (caching edge-scale rows per level is
         # the wrong trade at cluster scale) and the backward pass
         # falls back to the re-join form below.
-        pairs_by_level: list | None = [] if keep_pairs else None
+        pairs_by_level: list | None = []
         while depth < max_depth:
             prev = levels[-1]
             joined = edges.join(
@@ -311,10 +304,6 @@ def betweenness_sampled(
             out = out.unionAll(p)
         return out.groupBy("vertex").agg(
             F.sum("delta_q").cast("long").alias("bc_q")
-        )
-    finally:
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
         )
 
 

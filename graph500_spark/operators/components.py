@@ -24,14 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from graph500_spark.functions.confscope import (
-    acquire_scoped_conf,
-    release_scoped_conf,
-)
-from graph500_spark.functions.plantrunc import (
-    truncate_plan,
-    truncate_plan_lazy,
-)
+from graph500_spark.functions.confscope import scoped_session_confs
+from graph500_spark.functions.plantrunc import truncate_plan_lazy
 
 
 def connected_components(
@@ -48,27 +42,20 @@ def connected_components(
     """
     edges = edges_clean.select("src", "dst")
 
-    saved_sp = None
-    if shuffle_partitions is not None:
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", shuffle_partitions
+    with scoped_session_confs(
+        spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
+    ):
+        # lazy checkpoint + count = one driver barrier (guide §1.2/§5)
+        labels = (
+            edges.select(F.col("src").alias("vertex"))
+            .distinct()
+            .withColumn("label", F.col("vertex"))
+            .transform(truncate_plan_lazy)
         )
-
-    # lazy checkpoint + count = one driver barrier (guide §1.2/§5)
-    labels = (
-        edges.select(F.col("src").alias("vertex"))
-        .distinct()
-        .withColumn("label", F.col("vertex"))
-        .transform(truncate_plan_lazy)
-    )
-    frontier = labels
-    n_frontier = labels.count()
-    rounds = 0
-
-    try:
-        while True:
-            if max_rounds is not None and rounds >= max_rounds:
-                break
+        frontier = labels
+        n_frontier = labels.count()
+        rounds = 0
+        while max_rounds is None or rounds < max_rounds:
             rounds += 1
             f_side = frontier.select(
                 F.col("vertex").alias("src"), F.col("label").alias("f_label")
@@ -120,10 +107,6 @@ def connected_components(
             frontier = merged.filter("chg").select("vertex", "label")
             n_frontier = n_new
             old_labels.unpersist()
-    finally:
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
-        )
     return labels.select("vertex", F.col("label").alias("component"))
 
 
@@ -154,24 +137,6 @@ def connected_components_stars(
     set is localCheckpoint'ed per round. Terminates when E is stable
     (a forest of stars, center = component min); the final map reads
     each leaf's center off its star edge."""
-    saved_sp = None
-    if shuffle_partitions is not None:
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", shuffle_partitions
-        )
-
-    verts = (
-        edges_clean.select(F.col("src").alias("vertex"))
-        .distinct()
-        .transform(truncate_plan_lazy)
-    )
-    E = (
-        edges_clean.select("src", "dst")
-        .filter(F.col("src") < F.col("dst"))  # one row per undirected edge
-        .transform(truncate_plan_lazy)
-    )
-    n_edges = E.count()
-
     def large_star(e: DataFrame) -> DataFrame:
         sym = e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -199,7 +164,21 @@ def connected_components_stars(
         own = m.select(F.col("u").alias("src"), F.col("m").alias("dst"))
         return down.unionByName(own).dropDuplicates(["src", "dst"])
 
-    try:
+    with scoped_session_confs(
+        spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
+    ):
+        verts = (
+            edges_clean.select(F.col("src").alias("vertex"))
+            .distinct()
+            .transform(truncate_plan_lazy)
+        )
+        # one row per undirected edge
+        E = (
+            edges_clean.select("src", "dst")
+            .filter(F.col("src") < F.col("dst"))
+            .transform(truncate_plan_lazy)
+        )
+        n_edges = E.count()
         for _ in range(max_rounds):
             # lazy checkpoint + count = one driver barrier per round
             new_E = small_star(large_star(E)).transform(
@@ -226,10 +205,6 @@ def connected_components_stars(
             F.least(
                 F.coalesce("center", F.col("vertex")), F.col("vertex")
             ).alias("component"),
-        )
-    finally:
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
         )
 
 

@@ -294,10 +294,12 @@ def ego_subgraph(
     neighborhoods degrade to shuffle semi-joins."""
     from pyspark.sql import functions as F
 
-    from graph500_spark.operators.bfs import bfs_fixed_depth
+    from graph500_spark.operators.bfs import bfs
 
-    reached = bfs_fixed_depth(
-        spark, edges_clean, root, k, **bfs_kwargs
+    # the session width governs unless the caller scopes one
+    bfs_kwargs.setdefault("shuffle_partitions", None)
+    reached = bfs(
+        spark, edges_clean, root, max_depth=k, **bfs_kwargs
     ).select("vertex")
     if reached.count() <= broadcast_rows:
         reached = F.broadcast(reached)

@@ -29,10 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from graph500_spark.functions.plantrunc import (
-    truncate_plan,
-    truncate_plan_lazy,
-)
+from graph500_spark.functions.plantrunc import truncate_plan_lazy
 
 
 def k_core(

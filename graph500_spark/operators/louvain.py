@@ -74,10 +74,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from graph500_spark.functions.confscope import (
-    acquire_scoped_conf,
-    release_scoped_conf,
-)
+from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import (
     truncate_plan,
     truncate_plan_lazy,
@@ -106,12 +103,9 @@ def louvain_communities(
     from every gain difference). The modularity tracker's ``within``
     term omits the constant self-loop total — constant across
     assignments, so argmax ranking is unaffected."""
-    saved_sp = None
-    if shuffle_partitions is not None:
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", shuffle_partitions
-        )
-    try:
+    with scoped_session_confs(
+        spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
+    ):
         wcol = (
             F.col("weight").cast("long")
             if "weight" in edges_clean.columns
@@ -312,10 +306,6 @@ def louvain_communities(
             best_comm = comm
         edges.unpersist()
         return best_comm.select("vertex", "community")
-    finally:
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
-        )
 
 
 def louvain_quality(

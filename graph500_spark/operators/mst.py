@@ -36,10 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graph500_spark.operators.components import connected_components
-from graph500_spark.functions.confscope import (
-    acquire_scoped_conf,
-    release_scoped_conf,
-)
+from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import (
     truncate_plan,
     truncate_plan_lazy,
@@ -58,13 +55,9 @@ def minimum_spanning_forest(
     (self-loops ignored; parallel edges allowed, the cheapest under
     the (weight, lo, hi) order wins). src < dst in the output; one
     tree per connected component (V_c − 1 edges each)."""
-    saved_sp = None
-    if shuffle_partitions is not None:
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", shuffle_partitions
-        )
-    try:
-
+    with scoped_session_confs(
+        spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
+    ):
         edges = (
             edges_weighted.select(
                 F.least("src", "dst").alias("lo"),
@@ -196,10 +189,6 @@ def minimum_spanning_forest(
                 .transform(truncate_plan_lazy if small else truncate_plan)
             )
 
-    finally:
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
-        )
 
     if not forest_parts:
         return edges.select(

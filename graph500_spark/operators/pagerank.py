@@ -31,10 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from graph500_spark.functions.confscope import (
-    acquire_scoped_conf,
-    release_scoped_conf,
-)
+from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import (
     truncate_plan,
     truncate_plan_lazy,
@@ -68,13 +65,9 @@ def pagerank(
     # the source scan) would re-execute per iteration.
     edges = edges_clean.select("src", "dst").persist()
 
-    saved_sp = None
-    if shuffle_partitions is not None:
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", shuffle_partitions
-        )
-
-    try:
+    with scoped_session_confs(
+        spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
+    ):
         # Out-degrees double as the vertex universe (symmetrized graph:
         # src covers every non-isolated vertex). Cached once — reused
         # by every iteration's contribution join.
@@ -152,7 +145,3 @@ def pagerank(
         deg.unpersist()
         edges.unpersist()
         return out
-    finally:
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
-        )

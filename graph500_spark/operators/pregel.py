@@ -3,10 +3,12 @@
 The reference's BFS driver loop (/root/reference/mpi/bfs.hpp:2702-2911)
 is exactly Pregel's model — level-synchronous iteration with a global
 barrier per superstep (SURVEY.md §2.7). The engine's traversals
-(operators/bfs.py, sssp.py, components.py, pagerank.py) each hand-roll
-that loop with the same three scale disciplines; this module exposes
-the loop itself as an API so users can write new vertex programs
-without re-deriving them:
+(operators/bfs.py, sssp.py, components.py, pagerank.py) run that loop
+with the same three scale disciplines — bfs.py and sssp.py as one
+keyed loop each, shared by their single-root and batched entry
+points, the others as their own specialized loops; this module
+exposes the loop itself as an API so users can write new vertex
+programs without re-deriving them:
 
   1. per-superstep localCheckpoint → O(1) plan depth regardless of
      superstep count (never exponential lineage);
@@ -37,14 +39,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from graph500_spark.functions.confscope import (
-    acquire_scoped_conf,
-    release_scoped_conf,
-)
-from graph500_spark.functions.plantrunc import (
-    truncate_plan,
-    truncate_plan_lazy,
-)
+from graph500_spark.functions.confscope import scoped_session_confs
+from graph500_spark.functions.plantrunc import truncate_plan_lazy
 from graph500_spark.functions.sizing import resolve_shuffle_partitions
 
 
@@ -73,16 +69,12 @@ def pregel(
     sp_override = resolve_shuffle_partitions(
         spark, shuffle_partitions, edge_count, edges.count
     )
-    saved_sp = None
-    if sp_override is not None:
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", sp_override
-        )
-    # lazy checkpoint + count = one driver barrier (guide §1.2/§5)
-    state = vertices.transform(truncate_plan_lazy)
-    n_state = state.count()
-
-    try:
+    with scoped_session_confs(
+        spark, {"spark.sql.shuffle.partitions": sp_override}
+    ):
+        # lazy checkpoint + count = one driver barrier (guide §1.2/§5)
+        state = vertices.transform(truncate_plan_lazy)
+        n_state = state.count()
         for _ in range(n_supersteps):
             src_state = state.withColumnRenamed("vertex", "src")
             if n_state <= broadcast_rows:
@@ -125,12 +117,8 @@ def pregel(
                 old = state
                 state = new_state
                 old.unpersist()
-        edges.unpersist()
-        return state
-    finally:
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
-        )
+    edges.unpersist()
+    return state
 
 
 def label_propagation(

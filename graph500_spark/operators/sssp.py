@@ -23,6 +23,14 @@ groupBy(vertex) min-aggregation; the dist table is re-merged by a
 union + min-agg, one shuffle on vertex. ``localCheckpoint`` truncates
 the per-round lineage. Rounds ≤ hop-diameter of the shortest-path
 tree (weights ≥ 1 ⇒ finite).
+
+One round loop, ``_sssp_rounds``, serves both entry points. Its ``key``
+list names the columns that tell independent trees apart: ``[]`` for
+single-source ``sssp`` (state keyed by vertex alone) and ``["source"]``
+for batched ``sssp_multi`` (state keyed by (source, vertex), so the
+trees share each round's job but never interact). Every join and
+merge runs on ``[*key, "vertex"]``, so the single-source plan carries
+no constant key column.
 """
 
 from __future__ import annotations
@@ -30,14 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from graph500_spark.functions.confscope import (
-    acquire_scoped_conf,
-    release_scoped_conf,
-)
-from graph500_spark.functions.plantrunc import (
-    truncate_plan,
-    truncate_plan_lazy,
-)
+from graph500_spark.functions.confscope import scoped_session_confs
+from graph500_spark.functions.plantrunc import truncate_plan_lazy
 from graph500_spark.functions.sizing import resolve_shuffle_partitions
 
 DIST_SCHEMA = T.StructType(
@@ -47,6 +49,117 @@ DIST_SCHEMA = T.StructType(
         T.StructField("pred", T.LongType(), True),
     ]
 )
+
+
+def _sssp_rounds(
+    spark: SparkSession,
+    edges_weighted: DataFrame,
+    seeds: list[tuple],
+    schema: T.StructType | str,
+    key: list[str],
+    max_rounds: int | None,
+    shuffle_partitions: int | str | None,
+    broadcast_rows: int,
+    edge_count: int | None,
+) -> DataFrame:
+    """The delta-frontier relaxation loop behind ``sssp`` and
+    ``sssp_multi``: ``seeds`` are the dist-0 rows in ``schema`` order,
+    ``key`` the tree-identifying columns (module docstring). Returns
+    the final [*key, vertex, dist, pred] state, a checkpoint leaf."""
+    cols = [*key, "vertex"]
+    edges = edges_weighted.select("src", "dst", "weight")
+
+    # volume-derived default ("auto", functions/sizing.py): the edge
+    # table is NOT persisted here, so auto engages only when the
+    # caller supplies edge_count — never a scan over unpersisted
+    # lineage just to size shuffles.
+    sp_override = resolve_shuffle_partitions(
+        spark, shuffle_partitions, edge_count
+    )
+    with scoped_session_confs(
+        spark, {"spark.sql.shuffle.partitions": sp_override}
+    ):
+        dist = spark.createDataFrame(seeds, schema=schema).transform(
+            truncate_plan_lazy
+        )
+        frontier = dist
+        n_frontier = len(seeds)
+        rounds = 0
+        try:
+            while max_rounds is None or rounds < max_rounds:
+                rounds += 1
+                f_side = frontier.select(
+                    *key,
+                    F.col("vertex").alias("src"),
+                    F.col("dist").alias("f_dist"),
+                )
+                if n_frontier <= broadcast_rows:
+                    f_side = F.broadcast(f_side)
+                proposals = edges.join(f_side, "src").select(
+                    *key,
+                    F.col("dst").alias("vertex"),
+                    (F.col("f_dist") + F.col("weight")).alias("dist"),
+                    F.col("src").alias("pred"),
+                )
+                # merge: per vertex keep the lexicographic-min (dist,
+                # pred). The checkpoint makes the state a LEAF plan —
+                # the next round references it twice (union +
+                # improvement join), so anything short of truncation
+                # grows the plan tree exponentially with round count.
+                # LAZY: the improved.count below materializes merged
+                # AND improved in ONE job — one driver barrier per
+                # round instead of two (guide §1.2/§5).
+                merged = (
+                    dist.unionByName(proposals)
+                    .groupBy(*cols)
+                    .agg(F.min(F.struct("dist", "pred")).alias("best"))
+                    .select(
+                        *cols,
+                        F.col("best.dist").alias("dist"),
+                        F.col("best.pred").alias("pred"),
+                    )
+                    .transform(truncate_plan_lazy)
+                )
+                # improved = entries that changed this round (new
+                # vertex or struct-smaller entry) — the next frontier
+                old = dist.select(
+                    *cols,
+                    F.col("dist").alias("o_dist"),
+                    F.col("pred").alias("o_pred"),
+                )
+                improved = (
+                    merged.join(old, cols, "left")
+                    .filter(
+                        F.col("o_dist").isNull()
+                        | (F.col("dist") < F.col("o_dist"))
+                        | (
+                            (F.col("dist") == F.col("o_dist"))
+                            & (F.col("pred") < F.col("o_pred"))
+                        )
+                    )
+                    .select(*cols, "dist", "pred")
+                    .persist()  # shallow plan over two cached leaves
+                )
+                n_new = improved.count()
+                if n_new == 0:
+                    improved.unpersist()
+                    break
+                # the superseded round's blocks can be freed — without
+                # this, long loops accumulate O(rounds) cached state
+                old_dist, old_frontier = dist, frontier
+                dist = merged
+                frontier = improved
+                n_frontier = n_new
+                old_dist.unpersist()
+                if old_frontier is not old_dist:
+                    old_frontier.unpersist()
+        finally:
+            # the last frontier's blocks are dead on every exit path
+            # (n_new==0 break, max_rounds break, or an error) — without
+            # this each invocation leaks one persisted frontier
+            if frontier is not dist:
+                frontier.unpersist()
+    return dist
 
 
 def sssp(
@@ -63,104 +176,53 @@ def sssp(
     [src, dst, weight] with integer weights ≥ 1, already symmetrized
     if undirected semantics are wanted.
     """
-    edges = edges_weighted.select("src", "dst", "weight")
-
-    # volume-derived default ("auto", functions/sizing.py): the edge
-    # table is NOT persisted here, so auto engages only when the
-    # caller supplies edge_count — never a scan over unpersisted
-    # lineage just to size shuffles.
-    sp_override = resolve_shuffle_partitions(
-        spark, shuffle_partitions, edge_count
+    return _sssp_rounds(
+        spark,
+        edges_weighted,
+        [(int(root), 0, int(root))],
+        DIST_SCHEMA,
+        key=[],
+        max_rounds=max_rounds,
+        shuffle_partitions=shuffle_partitions,
+        broadcast_rows=broadcast_rows,
+        edge_count=edge_count,
     )
-    saved_sp = None
-    if sp_override is not None:
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", sp_override
-        )
 
-    dist = spark.createDataFrame(
-        [(int(root), 0, int(root))], schema=DIST_SCHEMA
-    ).transform(truncate_plan_lazy)
-    frontier = dist
-    n_frontier = 1
-    rounds = 0
 
-    try:
-        while True:
-            if max_rounds is not None and rounds >= max_rounds:
-                break
-            rounds += 1
-            f_side = frontier.select(
-                F.col("vertex").alias("src"), F.col("dist").alias("f_dist")
-            )
-            if n_frontier <= broadcast_rows:
-                f_side = F.broadcast(f_side)
-            proposals = edges.join(f_side, "src").select(
-                F.col("dst").alias("vertex"),
-                (F.col("f_dist") + F.col("weight")).alias("dist"),
-                F.col("src").alias("pred"),
-            )
-            # merge: per vertex keep the lexicographic-min (dist, pred).
-            # The checkpoint makes the state a LEAF plan — the next
-            # round references it twice (union + improvement join), so
-            # anything short of truncation grows the plan tree
-            # exponentially with round count. LAZY: the improved.count
-            # below materializes merged AND improved in ONE job — one
-            # driver barrier per round instead of two (guide §1.2/§5).
-            merged = (
-                dist.unionByName(proposals)
-                .groupBy("vertex")
-                .agg(F.min(F.struct("dist", "pred")).alias("best"))
-                .select(
-                    "vertex",
-                    F.col("best.dist").alias("dist"),
-                    F.col("best.pred").alias("pred"),
-                )
-                .transform(truncate_plan_lazy)
-            )
-            # improved = entries that changed this round (new vertex or
-            # struct-smaller entry) — the next frontier
-            old = dist.select(
-                "vertex",
-                F.col("dist").alias("o_dist"),
-                F.col("pred").alias("o_pred"),
-            )
-            improved = (
-                merged.join(old, "vertex", "left")
-                .filter(
-                    F.col("o_dist").isNull()
-                    | (F.col("dist") < F.col("o_dist"))
-                    | (
-                        (F.col("dist") == F.col("o_dist"))
-                        & (F.col("pred") < F.col("o_pred"))
-                    )
-                )
-                .select("vertex", "dist", "pred")
-                .persist()  # shallow plan over two cached leaves
-            )
-            n_new = improved.count()
-            if n_new == 0:
-                improved.unpersist()
-                break
-            # the superseded round's blocks can be freed — without
-            # this, long loops accumulate O(rounds) cached state
-            old_dist, old_frontier = dist, frontier
-            dist = merged
-            frontier = improved
-            n_frontier = n_new
-            old_dist.unpersist()
-            if old_frontier is not old_dist:
-                old_frontier.unpersist()
-    finally:
-        # the last frontier's blocks are dead on every exit path
-        # (n_new==0 break, max_rounds break, or an error) — without
-        # this each invocation leaks one persisted frontier
-        if frontier is not dist:
-            frontier.unpersist()
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
-        )
-    return dist
+def sssp_multi(
+    spark: SparkSession,
+    edges_weighted: DataFrame,
+    roots: list[int],
+    max_rounds: int | None = None,
+    shuffle_partitions: int | str | None = "auto",
+    broadcast_rows: int = 2_000_000,
+    edge_count: int | None = None,
+) -> DataFrame:
+    """[source, vertex, dist, pred] — k shortest-path trees through
+    ONE shared delta-frontier loop: the operators/bfs.py::bfs_multi
+    batching applied to weighted relaxation. Per-root results are
+    identical to sequential sssp() (the state is keyed by
+    (source, vertex), so trees never interact); the win is the
+    reference's 64-root batching story — the per-round scheduling
+    floor and the edge-table scan are paid once per BATCH, not once
+    per root (the bench's bfs_s16 sequential-vs-batched pair measures
+    that floor directly).
+
+    Scale shape per round: one frontier⋈edges equi-join on src (the
+    frontier broadcast while its TOTAL rows across sources stay under
+    the threshold — driver-known counts) + one (source, vertex)
+    min-struct merge with map-side partials."""
+    return _sssp_rounds(
+        spark,
+        edges_weighted,
+        [(int(r), int(r), 0, int(r)) for r in roots],
+        "source long, vertex long, dist long, pred long",
+        key=["source"],
+        max_rounds=max_rounds,
+        shuffle_partitions=shuffle_partitions,
+        broadcast_rows=broadcast_rows,
+        edge_count=edge_count,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -276,119 +338,3 @@ def validate_sssp(
         )
         out = one if out is None else out.unionByName(one)
     return out
-
-
-def sssp_multi(
-    spark: SparkSession,
-    edges_weighted: DataFrame,
-    roots: list[int],
-    max_rounds: int | None = None,
-    shuffle_partitions: int | str | None = "auto",
-    broadcast_rows: int = 2_000_000,
-    edge_count: int | None = None,
-) -> DataFrame:
-    """[source, vertex, dist, pred] — k shortest-path trees through
-    ONE shared delta-frontier loop: the operators/bfs.py::bfs_multi
-    batching applied to weighted relaxation. Per-root results are
-    identical to sequential sssp() (the state is keyed by
-    (source, vertex), so trees never interact); the win is the
-    reference's 64-root batching story — the per-round scheduling
-    floor and the edge-table scan are paid once per BATCH, not once
-    per root (the bench's bfs_s16 sequential-vs-batched pair measures
-    that floor directly).
-
-    Scale shape per round: one frontier⋈edges equi-join on src (the
-    frontier broadcast while its TOTAL rows across sources stay under
-    the threshold — driver-known counts) + one (source, vertex)
-    min-struct merge with map-side partials. localCheckpoint
-    truncates per-round lineage exactly as the single-source loop."""
-    edges = edges_weighted.select("src", "dst", "weight")
-
-    sp_override = resolve_shuffle_partitions(
-        spark, shuffle_partitions, edge_count
-    )
-    saved_sp = None
-    if sp_override is not None:
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", sp_override
-        )
-
-    schema = (
-        "source long, vertex long, dist long, pred long"
-    )
-    dist = spark.createDataFrame(
-        [(int(r), int(r), 0, int(r)) for r in roots], schema
-    ).transform(truncate_plan_lazy)
-    frontier = dist
-    n_frontier = len(roots)
-    rounds = 0
-
-    try:
-        while True:
-            if max_rounds is not None and rounds >= max_rounds:
-                break
-            rounds += 1
-            f_side = frontier.select(
-                "source",
-                F.col("vertex").alias("src"),
-                F.col("dist").alias("f_dist"),
-            )
-            if n_frontier <= broadcast_rows:
-                f_side = F.broadcast(f_side)
-            proposals = edges.join(f_side, "src").select(
-                "source",
-                F.col("dst").alias("vertex"),
-                (F.col("f_dist") + F.col("weight")).alias("dist"),
-                F.col("src").alias("pred"),
-            )
-            merged = (
-                dist.unionByName(proposals)
-                .groupBy("source", "vertex")
-                .agg(F.min(F.struct("dist", "pred")).alias("best"))
-                .select(
-                    "source",
-                    "vertex",
-                    F.col("best.dist").alias("dist"),
-                    F.col("best.pred").alias("pred"),
-                )
-                # lazy: improved.count() materializes both in one job
-                .transform(truncate_plan_lazy)
-            )
-            old = dist.select(
-                "source",
-                "vertex",
-                F.col("dist").alias("o_dist"),
-                F.col("pred").alias("o_pred"),
-            )
-            improved = (
-                merged.join(old, ["source", "vertex"], "left")
-                .filter(
-                    F.col("o_dist").isNull()
-                    | (F.col("dist") < F.col("o_dist"))
-                    | (
-                        (F.col("dist") == F.col("o_dist"))
-                        & (F.col("pred") < F.col("o_pred"))
-                    )
-                )
-                .select("source", "vertex", "dist", "pred")
-                .persist()
-            )
-            n_new = improved.count()
-            if n_new == 0:
-                improved.unpersist()
-                break
-            old_dist, old_frontier = dist, frontier
-            dist = merged
-            frontier = improved
-            n_frontier = n_new
-            old_dist.unpersist()
-            if old_frontier is not old_dist:
-                old_frontier.unpersist()
-    finally:
-        # same per-invocation frontier-leak fix as sssp() above
-        if frontier is not dist:
-            frontier.unpersist()
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
-        )
-    return dist

@@ -523,7 +523,7 @@ def k_truss_sql(clean_sql: str, k: int = 4, rounds: int = 8) -> str:
     identity once the fixpoint is reached)."""
     # MATERIALIZED is load-bearing: each round references the prior
     # half-edge set ~4×, so un-materialized CTEs inline exponentially
-    # (4^rounds base-table scans — the bfs_fixed_depth_sql lesson).
+    # (4^rounds base-table scans — the bfs_depth_k_sql lesson).
     parts = [
         f"WITH clean AS ({clean_sql})",
         "h0 AS MATERIALIZED"

@@ -111,7 +111,7 @@ def _clean_sql(raw_sql: str) -> str:
     )
 
 
-def bfs_fixed_depth_sql(edges_raw_sql: str, root: int, k: int) -> str:
+def bfs_depth_k_sql(edges_raw_sql: str, root: int, k: int) -> str:
     """Generate the k-level BFS oracle: the exact SQL unrolling of the
     engine's level-synchronous min-parent loop (operators/bfs.py)."""
     parts = [
@@ -710,11 +710,11 @@ def q_adjacency_strings(spark, sf_dir):
 def q_bfs_depth3(spark, sf_dir):
     # 8 reduce partitions fit the test data sizes (a cluster run
     # passes None); the constructed graph comes from the shared cache.
-    return bfs_mod.bfs_fixed_depth(
+    return bfs_mod.bfs(
         spark,
         clean_hetero_graph(spark, sf_dir),
         BFS_ROOT,
-        3,
+        max_depth=3,
         prepartition=False,
         shuffle_partitions=8,
     )
@@ -3331,10 +3331,10 @@ ORACLE_SQL: dict[str, str] = {
         " SELECT src, STRING_AGG(dst, ',' ORDER BY dst) AS neighbors,"
         " COUNT(*) AS degree FROM clean GROUP BY src"
     ),
-    "bfs_depth3": bfs_fixed_depth_sql(HETERO_EDGES_SQL, BFS_ROOT, 3),
+    "bfs_depth3": bfs_depth_k_sql(HETERO_EDGES_SQL, BFS_ROOT, 3),
     "edge_visit_count": (
         f"WITH raw AS ({HETERO_EDGES_SQL}),"
-        f" pred AS ({bfs_fixed_depth_sql(HETERO_EDGES_SQL, BFS_ROOT, 3)})"
+        f" pred AS ({bfs_depth_k_sql(HETERO_EDGES_SQL, BFS_ROOT, 3)})"
         " SELECT COUNT(*) AS edge_visit_count FROM raw"
         " JOIN pred ps ON raw.src = ps.vertex"
         " JOIN pred pd ON raw.dst = pd.vertex"
@@ -3428,7 +3428,7 @@ ORACLE_SQL: dict[str, str] = {
         "  AS assortativity FROM m"
     ),
     "ego_subgraph": (
-        f"WITH pred AS ({bfs_fixed_depth_sql(HETERO_EDGES_SQL, BFS_ROOT, 2)}),"
+        f"WITH pred AS ({bfs_depth_k_sql(HETERO_EDGES_SQL, BFS_ROOT, 2)}),"
         " reach AS (SELECT vertex FROM pred),"
         f" clean AS ({_clean_sql(HETERO_EDGES_SQL)})"
         " SELECT e.src, e.dst FROM clean e"

@@ -4,6 +4,8 @@ corrupted-fixture tests proving each check fires."""
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +15,27 @@ from graph500_spark.operators import validate as V
 from graph500_spark.sources import generator
 
 PRED_SCHEMA = "vertex long, pred long, depth int"
+
+
+def bfs_reference(edges, root):
+    """Driver-side level-synchronous BFS over directed (src, dst)
+    pairs: {vertex: (pred, depth)}, pred = the minimum frontier
+    neighbour, root = (root, 0) — the engine's spec convention."""
+    adj = defaultdict(list)
+    for s, d in edges:
+        adj[s].append(d)
+    out = {root: (root, 0)}
+    frontier, depth = [root], 0
+    while frontier:
+        depth += 1
+        nxt = {}
+        for u in frontier:
+            for v in adj[u]:
+                if v not in out and (v not in nxt or u < nxt[v]):
+                    nxt[v] = u
+        out.update((v, (u, depth)) for v, u in nxt.items())
+        frontier = list(nxt)
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -141,7 +164,8 @@ def test_bfs_on_kronecker_graph_validates(spark):
 class TestBfsMulti:
     def test_multi_equals_per_root(self, spark):
         """bfs_multi's per-root slices must be row-identical to
-        independent single-root runs (same min-parent convention)."""
+        independent single-root runs (same min-parent convention),
+        and both must equal the driver-side reference BFS."""
         from graph500_spark.operators.bfs import bfs, bfs_multi
         from graph500_spark.operators.graph_build import build_clean_edges
         from graph500_spark.sources.generator import (
@@ -150,6 +174,7 @@ class TestBfsMulti:
 
         g = build_clean_edges(generate_kronecker_edges(spark, 8, 8))
         g = g.persist()
+        pairs = [(r["src"], r["dst"]) for r in g.collect()]
         roots = [2, 5, 11]
         multi = bfs_multi(
             spark, g, roots, prepartition=False, shuffle_partitions=8
@@ -168,6 +193,12 @@ class TestBfsMulti:
             }
             mine = {k: v for k, v in got.items() if k[0] == root}
             assert mine == want, f"root {root} diverges"
+            ref = {
+                (root, v): pred_depth
+                for v, pred_depth in bfs_reference(pairs, root).items()
+            }
+            assert want == ref, f"bfs from root {root} != reference"
+            assert mine == ref, f"bfs_multi root {root} != reference"
         g.unpersist()
 
     def test_pred_free_same_level_sets(self, spark):

@@ -4,7 +4,9 @@ parity on small inputs (the oracle gate covers engine parity)."""
 
 from __future__ import annotations
 
+import heapq
 import math
+from collections import defaultdict
 
 from graph500_spark.operators.components import hub_ablation_components
 from graph500_spark.operators.simsearch import rrf_fusion
@@ -177,9 +179,34 @@ def test_louvain_oracle_matches_spark_on_barbell(spark):
     assert len({c for _, c in got}) == 2
 
 
+def dijkstra_reference(edges, root):
+    """Driver-side Dijkstra over directed (src, dst, weight) rows:
+    {vertex: (dist, pred)} with pred = min u such that
+    dist(u) + w(u, v) = dist(v); the root is (0, root)."""
+    adj = defaultdict(list)
+    for s, d, w in edges:
+        adj[s].append((d, w))
+    dist = {root: 0}
+    heap = [(0, root)]
+    while heap:
+        du, u = heapq.heappop(heap)
+        if du > dist[u]:
+            continue
+        for v, w in adj[u]:
+            if v not in dist or du + w < dist[v]:
+                dist[v] = du + w
+                heapq.heappush(heap, (du + w, v))
+    pred = {root: root}
+    for s, d, w in edges:
+        if d != root and s in dist and dist[s] + w == dist.get(d):
+            pred[d] = min(pred.get(d, s), s)
+    return {v: (dv, pred[v]) for v, dv in dist.items()}
+
+
 def test_sssp_multi_equals_sequential(spark):
     """Each tree from the shared multi-source loop must be
-    bit-identical to the sequential single-source run."""
+    bit-identical to the sequential single-source run, and both must
+    equal the driver-side Dijkstra."""
     from graph500_spark.operators.sssp import sssp, sssp_multi
     from graph500_spark.plans.queries import (
         SSSP_WEIGHT_EXPR,
@@ -189,6 +216,10 @@ def test_sssp_multi_equals_sequential(spark):
 
     clean = clean_mod997_graph(spark, "/root/testdata/sf0.001")
     weighted = clean.withColumn("weight", F.expr(SSSP_WEIGHT_EXPR))
+    rows = [
+        (r["src"], r["dst"], r["weight"])
+        for r in weighted.select("src", "dst", "weight").collect()
+    ]
     roots = [1, 5]
     multi = sssp_multi(spark, weighted, roots, shuffle_partitions=4)
     got = {
@@ -202,3 +233,8 @@ def test_sssp_multi_equals_sequential(spark):
             for r in seq.collect()
         }
         assert {k: v for k, v in got.items() if k[0] == root} == want
+        ref = {
+            (root, v): dp for v, dp in dijkstra_reference(rows, root).items()
+        }
+        assert want == ref, f"sssp from {root} != reference"
+        assert {k: v for k, v in got.items() if k[0] == root} == ref

@@ -180,7 +180,7 @@ class TestStronglyConnectedComponents:
 
 
 class TestBetweennessSampled:
-    def _bc(self, spark, und, roots):
+    def _bc(self, spark, und, roots, **kw):
         from graph500_spark.operators.centrality import (
             betweenness_sampled,
         )
@@ -191,7 +191,7 @@ class TestBetweennessSampled:
         return {
             r.vertex: r.bc_q
             for r in betweenness_sampled(
-                spark, edges, roots, shuffle_partitions=4
+                spark, edges, roots, shuffle_partitions=4, **kw
             ).collect()
         }
 
@@ -211,6 +211,16 @@ class TestBetweennessSampled:
         assert out[2] == 1_000_000 and out[3] == 1_000_000
         # endpoints: reached by the other root with δ = 0
         assert out[1] == 0 and out[4] == 0
+
+    def test_rejoin_fallback_matches_tree_pairs(self, spark):
+        # broadcast_rows=0 leaves the broadcast regime at the first
+        # level: the backward pass re-joins the edge table instead of
+        # reusing the forward pass's tree pairs — same integer sums
+        diamond = [(1, 2), (1, 3), (2, 4), (3, 4)]
+        for roots in ([1], [1, 4]):
+            assert self._bc(
+                spark, diamond, roots, broadcast_rows=0
+            ) == self._bc(spark, diamond, roots)
 
 
 class TestKatzCentrality:
