@@ -27,6 +27,12 @@ blocks are reclaimed by Spark's ContextCleaner when the driver drops
 the last reference (the loops rebind their variables every round, so
 this happens promptly).
 
+``cached`` is the one owner of a loop's stationary input cache (the
+edge table every superstep joins against): it persists the frame only
+when nothing caches that plan yet, and releases only what it
+persisted, in a ``finally``. A caller's own cache of the same plan is
+therefore never dropped, and a failed job never leaks the entry.
+
 The rewrap uses two JVM-internal calls (``parseDataType``,
 ``internalCreateDataFrame``); if a future Spark moves them, the
 helper degrades to the plain eager localCheckpoint — correct, merely
@@ -36,7 +42,10 @@ re-exposed to the stats pathology at extreme round counts.
 from __future__ import annotations
 
 import warnings
+from collections.abc import Iterator
+from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _warned_fallback = False
@@ -93,3 +102,23 @@ def truncate_plan_lazy(df: DataFrame) -> DataFrame:
         n = nxt.count()          # materializes + counts in one job
     """
     return truncate_plan(df, eager=False)
+
+
+@contextmanager
+def cached(df: DataFrame) -> Iterator[DataFrame]:
+    """Cache ``df`` for the duration of the block; yields ``df``.
+
+    ``df.storageLevel`` is looked up by plan, so a projection that is
+    a no-op over a cached frame (``g.select("src", "dst")`` on a cached
+    ``(src, dst)`` graph) already reads the caller's cache: then
+    nothing is persisted and nothing is released. Otherwise ``df`` is
+    persisted here and unpersisted on exit, also when the block
+    raises."""
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.persist()
+    try:
+        yield df
+    finally:
+        if owned:
+            df.unpersist()

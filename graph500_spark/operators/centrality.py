@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import (
+    cached,
     truncate_plan,
     truncate_plan_lazy,
 )
@@ -64,8 +65,7 @@ def betweenness_sampled(
     """
     with scoped_session_confs(
         spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
-    ):
-        edges = edges_clean.select("src", "dst").persist()
+    ), cached(edges_clean.select("src", "dst")) as edges:
         # ---- forward: depths + exact path counts per (root, vertex)
         frontier = spark.createDataFrame(
             [(r, r, 0, 1) for r in roots],
@@ -296,7 +296,6 @@ def betweenness_sampled(
             acc_parts.append(
                 delta.filter(F.col("vertex") != F.col("root"))
             )
-        edges.unpersist()
         if not acc_parts:
             return spark.createDataFrame([], "vertex: long, bc_q: long")
         out = acc_parts[0]
@@ -423,6 +422,7 @@ def katz_centrality(
         apply_fn=lambda st, inbox: st.join(inbox, "vertex", "left").select(
             "vertex",
             F.coalesce("msg", F.lit(0)).cast("long").alias("katz_q"),
+            (F.coalesce("msg", F.lit(0)) != F.col("katz_q")).alias("chg"),
         ),
         n_supersteps=n_iterations,
         shuffle_partitions=shuffle_partitions,

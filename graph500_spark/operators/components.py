@@ -10,14 +10,20 @@ vertex adopts the minimum label among itself and its neighbors. Only
 vertices whose label changed last round (the delta frontier) propagate,
 so per-round work tracks the shrinking changing set. Converges in
 O(component hop-diameter) rounds to label(v) = min vertex id in v's
-component — a deterministic, oracle-checkable result.
+component — a deterministic, oracle-checkable result. The loop is not
+written here: ``connected_components`` and both fixpoints of
+``strongly_connected_components`` are min/max-label programs on
+``operators/pregel.py`` (``propagate_extreme``, active-only sends),
+which owns the checkpointing, the broadcast of the changed set, the
+stop rule and the edge cache.
 
 Scale notes: for graphs with huge-diameter components the
 round-latency-optimal choice is the large-star/small-star algorithm
 (Kiveris et al., "Connected Components in MapReduce and Beyond",
 SoCC'14 — O(log² n) rounds); Kronecker/social graphs have tiny
-diameters, so plain delta propagation wins there. Frontier joins use
-the driver-known-count broadcast strategy of operators/bfs.py.
+diameters, so plain delta propagation wins there.
+``connected_components_stars`` rewrites the edge set each round, so
+it keeps its own loop.
 """
 
 from __future__ import annotations
@@ -25,7 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from graph500_spark.functions.confscope import scoped_session_confs
-from graph500_spark.functions.plantrunc import truncate_plan_lazy
+from graph500_spark.functions.plantrunc import cached, truncate_plan_lazy
+from graph500_spark.operators.pregel import propagate_extreme
 
 
 def connected_components(
@@ -40,74 +47,20 @@ def connected_components(
     Isolated vertices don't appear in the edge list and so don't
     appear in the output (same convention as BFS's reached set).
     """
-    edges = edges_clean.select("src", "dst")
-
-    with scoped_session_confs(
-        spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
-    ):
-        # lazy checkpoint + count = one driver barrier (guide §1.2/§5)
-        labels = (
-            edges.select(F.col("src").alias("vertex"))
-            .distinct()
-            .withColumn("label", F.col("vertex"))
-            .transform(truncate_plan_lazy)
-        )
-        frontier = labels
-        n_frontier = labels.count()
-        rounds = 0
-        while max_rounds is None or rounds < max_rounds:
-            rounds += 1
-            f_side = frontier.select(
-                F.col("vertex").alias("src"), F.col("label").alias("f_label")
-            )
-            if n_frontier <= broadcast_rows:
-                f_side = F.broadcast(f_side)
-            proposals = edges.join(f_side, "src").select(
-                F.col("dst").alias("vertex"), F.col("f_label").alias("label")
-            )
-            # Merge = the label table LEFT JOIN the per-vertex min of
-            # the proposals (not a union + full re-aggregation): the
-            # only shuffle is the (delta-sized) proposal aggregation —
-            # the stationary |V|-row label table is joined map-side
-            # when AQE sees the aggregated side is small, and falls
-            # back to a shuffle join at cluster scale. The change flag
-            # rides in the checkpoint, so the frontier is a narrow
-            # filter over the cached leaf and the round's scalar
-            # readout is one agg job. (The eager checkpoint still
-            # truncates lineage — the next round references the state
-            # twice.)
-            p_agg = proposals.groupBy("vertex").agg(
-                F.min("label").alias("p_label")
-            )
-            merged = (
-                labels.join(p_agg, "vertex", "left")
-                .select(
-                    "vertex",
-                    F.least(
-                        "label", F.coalesce("p_label", "label")
-                    ).alias("label"),
-                    F.coalesce(
-                        F.col("p_label") < F.col("label"), F.lit(False)
-                    ).alias("chg"),
-                )
-                # lazy: the scalar readout below materializes it —
-                # one driver barrier per round instead of two
-                .transform(truncate_plan_lazy)
-            )
-            n_new = (
-                merged.agg(
-                    F.sum(F.col("chg").cast("long")).alias("n")
-                ).first()["n"]
-                or 0
-            )
-            if n_new == 0:
-                break
-            old_labels = labels
-            labels = merged.select("vertex", "label")
-            frontier = merged.filter("chg").select("vertex", "label")
-            n_frontier = n_new
-            old_labels.unpersist()
-    return labels.select("vertex", F.col("label").alias("component"))
+    labels = (
+        edges_clean.select(F.col("src").alias("vertex"))
+        .distinct()
+        .withColumn("label", F.col("vertex"))
+    )
+    return propagate_extreme(
+        spark,
+        edges_clean.select("src", "dst"),
+        labels,
+        F.least,
+        n_supersteps=max_rounds,
+        shuffle_partitions=shuffle_partitions,
+        broadcast_rows=broadcast_rows,
+    ).select("vertex", F.col("label").alias("component"))
 
 
 def connected_components_stars(
@@ -234,128 +187,103 @@ def strongly_connected_components(
          reach the pivot too, contradicting color(c) = c);
       3. marked vertices form whole SCCs; emit and remove them.
     Outer rounds ≤ the longest path in the SCC condensation DAG (one
-    pivot SCC per color per round). Each inner fixpoint is the CC
-    loop's shape: one equi-join + map-side-partial min per superstep,
-    checkpointed state — the 100 TB-safe iterative dataflow.
+    pivot SCC per color per round). Both inner fixpoints run on
+    ``propagate_extreme`` — min colors, then max (= or) of the pivot
+    mark — the CC program: one equi-join + map-side-partial min/max
+    per superstep from the changed vertices only, checkpointed state.
     """
-    from graph500_spark.operators.pregel import pregel
-
-    edges = edges_directed.select("src", "dst").persist()
-    verts = (
-        edges.select(F.col("src").alias("vertex"))
-        .unionAll(edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .transform(truncate_plan_lazy)
-    )
-    remaining = verts
-    # remaining/colors are stat-less checkpoint leaves; the driver
-    # tracks the remaining count and injects broadcast() on every
-    # <=|remaining|-row side while it fits (bfs.py discipline) — the
-    # stationary edge cache is otherwise shuffled several times per
-    # outer round.
-    n_remaining = remaining.count()
-    parts: list[DataFrame] = []
-    for _ in range(max_outer):
-        if n_remaining == 0:
-            break
-
-        def bc(df):
-            return (
-                F.broadcast(df)
-                if n_remaining <= broadcast_rows
-                else df
-            )
-
-        live = (
-            edges.join(
-                bc(remaining.select(F.col("vertex").alias("src"))),
-                "src", "left_semi",
-            ).join(
-                bc(remaining.select(F.col("vertex").alias("dst"))),
-                "dst", "left_semi",
-            )
-        )
-        colors = pregel(
-            spark,
-            live,
-            remaining.select("vertex", F.col("vertex").alias("color")),
-            send=lambda j: j.select(
-                F.col("dst").alias("vertex"), F.col("color").alias("msg")
-            ),
-            merge=[F.min("msg").alias("msg")],
-            apply_fn=lambda st, inbox: st.join(inbox, "vertex", "left")
-            .select(
-                "vertex",
-                F.least(
-                    F.col("color"), F.coalesce("msg", F.col("color"))
-                ).alias("color"),
-            ),
-            n_supersteps=10**6,
-            until_unchanged=True,
-            shuffle_partitions=shuffle_partitions,
-        )
-        # color-homogeneous REVERSED edges; propagate pivot reach
-        ce = (
-            live.join(
-                bc(
-                    colors.select(
-                        F.col("vertex").alias("src"),
-                        F.col("color").alias("cs"),
-                    )
-                ),
-                "src",
-            )
-            .join(
-                bc(
-                    colors.select(
-                        F.col("vertex").alias("dst"),
-                        F.col("color").alias("cd"),
-                    )
-                ),
-                "dst",
-            )
-            .filter(F.col("cs") == F.col("cd"))
-            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        marked = pregel(
-            spark,
-            ce,
-            colors.select(
-                "vertex",
-                (F.col("vertex") == F.col("color")).alias("mark"),
-            ),
-            send=lambda j: j.select(
-                F.col("dst").alias("vertex"), F.col("mark").alias("msg")
-            ),
-            merge=[F.max("msg").alias("msg")],
-            apply_fn=lambda st, inbox: st.join(inbox, "vertex", "left")
-            .select(
-                "vertex",
-                (F.col("mark") | F.coalesce("msg", F.lit(False))).alias(
-                    "mark"
-                ),
-            ),
-            n_supersteps=10**6,
-            until_unchanged=True,
-            shuffle_partitions=shuffle_partitions,
-        )
-        members = (
-            marked.filter("mark")
-            .join(bc(colors), "vertex")
-            .select("vertex", F.col("color").alias("scc_id"))
+    with cached(edges_directed.select("src", "dst")) as edges:
+        verts = (
+            edges.select(F.col("src").alias("vertex"))
+            .unionAll(edges.select(F.col("dst").alias("vertex")))
+            .distinct()
             .transform(truncate_plan_lazy)
         )
-        parts.append(members)
-        # lazy: remaining.count() materializes both leaves in one job
-        remaining = remaining.join(
-            bc(members.select("vertex")), "vertex", "left_anti"
-        ).transform(truncate_plan_lazy)
+        remaining = verts
+        # remaining/colors are stat-less checkpoint leaves; the driver
+        # tracks the remaining count and injects broadcast() on every
+        # <=|remaining|-row side while it fits (bfs.py discipline) —
+        # the stationary edge cache is otherwise shuffled several
+        # times per outer round.
         n_remaining = remaining.count()
-    if n_remaining != 0:
-        raise RuntimeError(
-            f"scc did not converge in {max_outer} outer rounds"
-        )
-    edges.unpersist()
+        parts: list[DataFrame] = []
+
+        def bc(df):
+            return F.broadcast(df) if n_remaining <= broadcast_rows else df
+
+        def fixpoint(e: DataFrame, labels: DataFrame, pick) -> DataFrame:
+            return propagate_extreme(
+                spark, e, labels, pick,
+                shuffle_partitions=shuffle_partitions,
+                broadcast_rows=broadcast_rows,
+            )
+
+        for _ in range(max_outer):
+            if n_remaining == 0:
+                break
+            live = (
+                edges.join(
+                    bc(remaining.select(F.col("vertex").alias("src"))),
+                    "src", "left_semi",
+                ).join(
+                    bc(remaining.select(F.col("vertex").alias("dst"))),
+                    "dst", "left_semi",
+                )
+            )
+            colors = fixpoint(
+                live,
+                remaining.select("vertex", F.col("vertex").alias("label")),
+                F.least,
+            ).withColumnRenamed("label", "color")
+            # color-homogeneous REVERSED edges; propagate pivot reach
+            ce = (
+                live.join(
+                    bc(
+                        colors.select(
+                            F.col("vertex").alias("src"),
+                            F.col("color").alias("cs"),
+                        )
+                    ),
+                    "src",
+                )
+                .join(
+                    bc(
+                        colors.select(
+                            F.col("vertex").alias("dst"),
+                            F.col("color").alias("cd"),
+                        )
+                    ),
+                    "dst",
+                )
+                .filter(F.col("cs") == F.col("cd"))
+                .select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                )
+            )
+            marked = fixpoint(
+                ce,
+                colors.select(
+                    "vertex",
+                    (F.col("vertex") == F.col("color")).alias("label"),
+                ),
+                F.greatest,
+            )
+            members = (
+                marked.filter("label")
+                .join(bc(colors), "vertex")
+                .select("vertex", F.col("color").alias("scc_id"))
+                .transform(truncate_plan_lazy)
+            )
+            parts.append(members)
+            # lazy: remaining.count() materializes both leaves in one job
+            remaining = remaining.join(
+                bc(members.select("vertex")), "vertex", "left_anti"
+            ).transform(truncate_plan_lazy)
+            n_remaining = remaining.count()
+        if n_remaining != 0:
+            raise RuntimeError(
+                f"scc did not converge in {max_outer} outer rounds"
+            )
     if not parts:
         return verts.select(
             "vertex", F.col("vertex").alias("scc_id")

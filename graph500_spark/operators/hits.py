@@ -42,6 +42,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from graph500_spark.functions.plantrunc import (
+    cached,
     truncate_plan,
     truncate_plan_lazy,
 )
@@ -55,97 +56,96 @@ def hits(
 ) -> DataFrame:
     """[vertex, hub, auth] after `n_iterations` rounds from the
     uniform authority vector over a directed [src, dst] edge list."""
-    edges = edges_directed.select("src", "dst").persist()
-    verts = (
-        edges.select(F.col("src").alias("vertex"))
-        .unionByName(edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-        # lazy checkpoint + count = one driver barrier (guide §1.2/§5)
-        .transform(truncate_plan_lazy)
-    )
-    n = verts.count()
-    m = edges.count()  # also materializes the edge cache
-
-    # Exact power-of-two per-iteration rescale (see module docstring).
-    shift = max(0, round(math.log2(max(m / n, 1.0))))
-    iter_scale = math.ldexp(1.0, -2 * shift)
-
-    # lazy when the score vector broadcasts (the blocking broadcast
-    # build materializes it); eager past broadcast_rows — a lazy leaf
-    # with two consumers and no blocking build risks double compute.
-    tp = truncate_plan_lazy if n <= broadcast_rows else truncate_plan
-    auth = verts.select(
-        "vertex", (F.lit(1.0) / F.lit(float(n))).alias("score")
-    ).transform(tp)
-
-    def half_step(
-        scores: DataFrame, out_edges: bool, scale: float = 1.0
-    ) -> DataFrame:
-        """sum scores over (out_edges ? dst : src) neighbors (raw,
-        unnormalized, LAZY — caller decides where to checkpoint)."""
-        s = scores.withColumnRenamed(
-            "vertex", "dst" if out_edges else "src"
+    with cached(edges_directed.select("src", "dst")) as edges:
+        verts = (
+            edges.select(F.col("src").alias("vertex"))
+            .unionByName(edges.select(F.col("dst").alias("vertex")))
+            .distinct()
+            # lazy checkpoint + count = one driver barrier (guide §1.2/§5)
+            .transform(truncate_plan_lazy)
         )
-        if n <= broadcast_rows:
-            s = F.broadcast(s)
-        raw = (
-            edges.join(s, "dst" if out_edges else "src")
-            .groupBy(
-                F.col("src" if out_edges else "dst").alias("vertex")
-            )
-            .agg(F.sum("score").alias("raw"))
-        )
-        score_col = F.col("raw")
-        if scale != 1.0:
-            score_col = score_col * F.lit(scale)
-        # SPARSE representation: vertices absent from `raw` have score
-        # 0 and contribute nothing to the next half-step's sum, so the
-        # zero-fill left-join against `verts` is deferred to the final
-        # output (2 fewer joins per iteration).
-        return raw.select("vertex", score_col.alias("score"))
+        n = verts.count()
+        m = edges.count()  # also materializes the edge cache
 
-    hub = auth
-    for it in range(n_iterations):
-        last = it == n_iterations - 1
-        # Hub stays lazy mid-loop: its only consumer is the auth
-        # half-step below, so both shuffles run in the auth
-        # checkpoint's single job. The final iteration checkpoints it
-        # (it outlives the loop into the returned plan, and the edge
-        # cache is dropped on return).
-        hub = half_step(auth, out_edges=True)
-        if last:
-            hub = hub.transform(tp)
-        prev_auth = auth
-        auth = half_step(
-            hub, out_edges=False, scale=iter_scale
+        # Exact power-of-two per-iteration rescale (see module docstring).
+        shift = max(0, round(math.log2(max(m / n, 1.0))))
+        iter_scale = math.ldexp(1.0, -2 * shift)
+
+        # lazy when the score vector broadcasts (the blocking broadcast
+        # build materializes it); eager past broadcast_rows — a lazy leaf
+        # with two consumers and no blocking build risks double compute.
+        tp = truncate_plan_lazy if n <= broadcast_rows else truncate_plan
+        auth = verts.select(
+            "vertex", (F.lit(1.0) / F.lit(float(n))).alias("score")
         ).transform(tp)
-        # Safe to drop: mid-loop the lazy hub tree referencing it is
-        # superseded next iteration; on the last iteration hub was
-        # checkpointed above, truncating its lineage.
-        prev_auth.unpersist()
 
-    h_total = hub.agg(F.sum("score").alias("h_total"))
-    a_total = auth.agg(F.sum("score").alias("a_total"))
-    out = (
-        verts.join(hub.withColumnRenamed("score", "h"), "vertex", "left")
-        .join(auth.withColumnRenamed("score", "a"), "vertex", "left")
-        .crossJoin(F.broadcast(h_total))
-        .crossJoin(F.broadcast(a_total))
-        .select(
-            "vertex",
-            F.round(
-                F.coalesce("h", F.lit(0.0))
-                / F.col("h_total")
-                * F.lit(float(n)),
-                5,
-            ).alias("hub"),
-            F.round(
-                F.coalesce("a", F.lit(0.0))
-                / F.col("a_total")
-                * F.lit(float(n)),
-                5,
-            ).alias("auth"),
+        def half_step(
+            scores: DataFrame, out_edges: bool, scale: float = 1.0
+        ) -> DataFrame:
+            """sum scores over (out_edges ? dst : src) neighbors (raw,
+            unnormalized, LAZY — caller decides where to checkpoint)."""
+            s = scores.withColumnRenamed(
+                "vertex", "dst" if out_edges else "src"
+            )
+            if n <= broadcast_rows:
+                s = F.broadcast(s)
+            raw = (
+                edges.join(s, "dst" if out_edges else "src")
+                .groupBy(
+                    F.col("src" if out_edges else "dst").alias("vertex")
+                )
+                .agg(F.sum("score").alias("raw"))
+            )
+            score_col = F.col("raw")
+            if scale != 1.0:
+                score_col = score_col * F.lit(scale)
+            # SPARSE representation: vertices absent from `raw` have score
+            # 0 and contribute nothing to the next half-step's sum, so the
+            # zero-fill left-join against `verts` is deferred to the final
+            # output (2 fewer joins per iteration).
+            return raw.select("vertex", score_col.alias("score"))
+
+        hub = auth
+        for it in range(n_iterations):
+            last = it == n_iterations - 1
+            # Hub stays lazy mid-loop: its only consumer is the auth
+            # half-step below, so both shuffles run in the auth
+            # checkpoint's single job. The final iteration checkpoints it
+            # (it outlives the loop into the returned plan, and the edge
+            # cache is dropped on return).
+            hub = half_step(auth, out_edges=True)
+            if last:
+                hub = hub.transform(tp)
+            prev_auth = auth
+            auth = half_step(
+                hub, out_edges=False, scale=iter_scale
+            ).transform(tp)
+            # Safe to drop: mid-loop the lazy hub tree referencing it is
+            # superseded next iteration; on the last iteration hub was
+            # checkpointed above, truncating its lineage.
+            prev_auth.unpersist()
+
+        h_total = hub.agg(F.sum("score").alias("h_total"))
+        a_total = auth.agg(F.sum("score").alias("a_total"))
+        out = (
+            verts.join(hub.withColumnRenamed("score", "h"), "vertex", "left")
+            .join(auth.withColumnRenamed("score", "a"), "vertex", "left")
+            .crossJoin(F.broadcast(h_total))
+            .crossJoin(F.broadcast(a_total))
+            .select(
+                "vertex",
+                F.round(
+                    F.coalesce("h", F.lit(0.0))
+                    / F.col("h_total")
+                    * F.lit(float(n)),
+                    5,
+                ).alias("hub"),
+                F.round(
+                    F.coalesce("a", F.lit(0.0))
+                    / F.col("a_total")
+                    * F.lit(float(n)),
+                    5,
+                ).alias("auth"),
+            )
         )
-    )
-    edges.unpersist()
-    return out
+        return out

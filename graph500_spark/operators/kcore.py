@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from graph500_spark.functions.plantrunc import truncate_plan_lazy
+from graph500_spark.functions.plantrunc import cached, truncate_plan_lazy
 
 
 def k_core(
@@ -115,58 +115,57 @@ def core_numbers(
     exactly the k_core_sql convention)."""
     from pyspark.sql.window import Window
 
-    edges = edges_clean.select("src", "dst").persist()
-    c = (
-        edges.groupBy(F.col("src").alias("vertex"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .transform(truncate_plan_lazy)
-    )
-    # |V| is loop-invariant (the h-index update preserves the vertex
-    # set); checkpointed leaves carry no stats, so without an explicit
-    # hint Catalyst would shuffle the STATIONARY edge table against the
-    # tiny state every round — the driver knows the count and injects
-    # broadcast() while it fits, exactly the bfs.py discipline.
-    n_vertices = c.count()
-    for _ in range(max_iters):
-        c_side = c.select(
-            F.col("vertex").alias("dst"), F.col("c").alias("c_nbr")
-        )
-        if n_vertices <= broadcast_rows:
-            c_side = F.broadcast(c_side)
-        nbr = edges.join(c_side, "dst").select(
-            F.col("src").alias("vertex"), "c_nbr"
-        )
-        w = Window.partitionBy("vertex").orderBy(F.desc("c_nbr"))
-        h = (
-            nbr.select(
-                "vertex",
-                F.least(F.col("c_nbr"), F.row_number().over(w)).alias(
-                    "m"
-                ),
-            )
-            .groupBy("vertex")
-            .agg(F.max("m").cast("long").alias("h"))
-        )
-        # the change flag rides in the checkpoint so the fixpoint test
-        # is one narrow agg over the cached leaf, not a second join
-        new_c = (
-            c.join(h, "vertex")
-            .select(
-                "vertex",
-                F.least("c", "h").alias("c"),
-                (F.least("c", "h") != F.col("c")).alias("chg"),
-            )
-            # lazy: the fixpoint agg below materializes it — one
-            # driver barrier per round instead of two
+    with cached(edges_clean.select("src", "dst")) as edges:
+        c = (
+            edges.groupBy(F.col("src").alias("vertex"))
+            .agg(F.count(F.lit(1)).cast("long").alias("c"))
             .transform(truncate_plan_lazy)
         )
-        changed = new_c.agg(
-            F.sum(F.col("chg").cast("long")).alias("n")
-        ).first()["n"]
-        old = c
-        c = new_c.select("vertex", "c")
-        old.unpersist()
-        if changed == 0:
-            break
-    edges.unpersist()
+        # |V| is loop-invariant (the h-index update preserves the vertex
+        # set); checkpointed leaves carry no stats, so without an explicit
+        # hint Catalyst would shuffle the STATIONARY edge table against the
+        # tiny state every round — the driver knows the count and injects
+        # broadcast() while it fits, exactly the bfs.py discipline.
+        n_vertices = c.count()
+        for _ in range(max_iters):
+            c_side = c.select(
+                F.col("vertex").alias("dst"), F.col("c").alias("c_nbr")
+            )
+            if n_vertices <= broadcast_rows:
+                c_side = F.broadcast(c_side)
+            nbr = edges.join(c_side, "dst").select(
+                F.col("src").alias("vertex"), "c_nbr"
+            )
+            w = Window.partitionBy("vertex").orderBy(F.desc("c_nbr"))
+            h = (
+                nbr.select(
+                    "vertex",
+                    F.least(F.col("c_nbr"), F.row_number().over(w)).alias(
+                        "m"
+                    ),
+                )
+                .groupBy("vertex")
+                .agg(F.max("m").cast("long").alias("h"))
+            )
+            # the change flag rides in the checkpoint so the fixpoint test
+            # is one narrow agg over the cached leaf, not a second join
+            new_c = (
+                c.join(h, "vertex")
+                .select(
+                    "vertex",
+                    F.least("c", "h").alias("c"),
+                    (F.least("c", "h") != F.col("c")).alias("chg"),
+                )
+                # lazy: the fixpoint agg below materializes it — one
+                # driver barrier per round instead of two
+                .transform(truncate_plan_lazy)
+            )
+            changed = new_c.agg(
+                F.sum(F.col("chg").cast("long")).alias("n")
+            ).first()["n"]
+            old = c
+            c = new_c.select("vertex", "c")
+            old.unpersist()
+            if changed == 0:
+                break
     return c.select("vertex", F.col("c").alias("coreness"))

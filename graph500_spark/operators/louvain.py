@@ -76,6 +76,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import (
+    cached,
     truncate_plan,
     truncate_plan_lazy,
 )
@@ -103,17 +104,14 @@ def louvain_communities(
     from every gain difference). The modularity tracker's ``within``
     term omits the constant self-loop total — constant across
     assignments, so argmax ranking is unaffected."""
+    wcol = (
+        F.col("weight").cast("long")
+        if "weight" in edges_clean.columns
+        else F.lit(1).cast("long")
+    )
     with scoped_session_confs(
         spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
-    ):
-        wcol = (
-            F.col("weight").cast("long")
-            if "weight" in edges_clean.columns
-            else F.lit(1).cast("long")
-        )
-        edges = edges_clean.select(
-            "src", "dst", wcol.alias("w")
-        ).persist()
+    ), cached(edges_clean.select("src", "dst", wcol.alias("w"))) as edges:
         # strength: ALL incident weight including self-loops
         deg = (
             edges.groupBy(F.col("src").alias("vertex"))
@@ -304,7 +302,6 @@ def louvain_communities(
         f_qnum = (f_row["within"] or 0) * two_m - f_sumsq
         if f_qnum > best_qnum:
             best_comm = comm
-        edges.unpersist()
         return best_comm.select("vertex", "community")
 
 

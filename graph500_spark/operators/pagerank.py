@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import (
+    cached,
     truncate_plan,
     truncate_plan_lazy,
 )
@@ -60,23 +61,21 @@ def pagerank(
     seed-expansion / related-items primitive). Identical plan shape;
     only the two teleport expressions change.
     """
-    # Persist the edge table once: every iteration joins against it,
+    # Cache the edge table once: every iteration joins against it,
     # and without the cache the upstream construction (2 shuffles +
     # the source scan) would re-execute per iteration.
-    edges = edges_clean.select("src", "dst").persist()
-
-    with scoped_session_confs(
-        spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
-    ):
-        # Out-degrees double as the vertex universe (symmetrized graph:
-        # src covers every non-isolated vertex). Cached once — reused
-        # by every iteration's contribution join.
-        deg = (
-            edges.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("outdeg"))
-            .withColumnRenamed("src", "vertex")
-            .persist()
+    # Out-degrees double as the vertex universe (symmetrized graph:
+    # src covers every non-isolated vertex). Cached once, inside the
+    # conf scope — reused by every iteration's contribution join.
+    with cached(edges_clean.select("src", "dst")) as edges, (
+        scoped_session_confs(
+            spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
         )
+    ), cached(
+        edges.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("outdeg"))
+        .withColumnRenamed("src", "vertex")
+    ) as deg:
         n_vertices = deg.count()
 
         if sources is None:
@@ -142,6 +141,4 @@ def pagerank(
             ),
         )
         # ranks is a checkpoint leaf, so the caches feeding it can go.
-        deg.unpersist()
-        edges.unpersist()
         return out

@@ -1,21 +1,23 @@
-"""Generic Pregel-style superstep engine over DataFrames.
+"""Generic Pregel-style superstep engine over DataFrames: the one
+fixpoint loop for vertex programs.
 
 The reference's BFS driver loop (/root/reference/mpi/bfs.hpp:2702-2911)
 is exactly Pregel's model — level-synchronous iteration with a global
-barrier per superstep (SURVEY.md §2.7). The engine's traversals
-(operators/bfs.py, sssp.py, components.py, pagerank.py) run that loop
-with the same three scale disciplines — bfs.py and sssp.py as one
-keyed loop each, shared by their single-root and batched entry
-points, the others as their own specialized loops; this module
-exposes the loop itself as an API so users can write new vertex
-programs without re-deriving them:
+barrier per superstep (SURVEY.md §2.7). This module exposes that loop
+as an API, so a vertex program is a send, a merge and an apply, and
+the scale disciplines live here once:
 
-  1. per-superstep localCheckpoint → O(1) plan depth regardless of
-     superstep count (never exponential lineage);
-  2. driver-known vertex-state counts drive explicit broadcast hints
-     (loop state carries no Catalyst stats, so AQE alone would shuffle
-     the full edge table every round);
-  3. superseded round state is unpersisted so cached blocks stay O(1).
+  1. per-superstep lazy localCheckpoint → O(1) plan depth regardless
+     of superstep count, materialized by the superstep's own readout
+     (one driver barrier per superstep);
+  2. driver-known counts drive explicit broadcast hints on the
+     sending side (loop state carries no Catalyst stats, so AQE alone
+     would shuffle the full edge table every round);
+  3. superseded round state is dropped by rebinding, so the
+     ContextCleaner reclaims its blocks and cached state stays O(1);
+  4. the stationary edge table is held by ``cached`` (one owner: a
+     caller's cache of the same plan is reused and kept, and a failed
+     job releases what the loop persisted).
 
 A vertex program supplies:
   * `vertices`: initial state DataFrame [vertex, <state cols>];
@@ -24,13 +26,34 @@ A vertex program supplies:
     src, dst, edge cols, and the source's state cols);
   * `merge: list[Column]` aggregate expressions combining messages
     per destination vertex;
-  * `apply(old, inbox) -> DataFrame[vertex, <state cols>]`: join of
-    previous state with merged inbox → next state.
+  * `apply(old, inbox) -> DataFrame[vertex, <state cols>, chg]`: join
+    of previous state with merged inbox → next state, plus a boolean
+    `chg` that is true exactly where the vertex's state changed.
 
-Termination: fixed `n_supersteps`, or `until_unchanged=True` to stop
-when the state DataFrame reaches a fixpoint (compared by except-count,
-one extra job per round — the analog of the reference's
-`global_nq_size == 0` check).
+Stop rule: each superstep reads `count` and `sum(chg)` in the one job
+that materializes the new state. The loop stops after `n_supersteps`
+(None = no bound), or as soon as no vertex changed — the analog of
+the reference's `global_nq_size == 0` check. Stopping there is exact
+for any program: a superstep is a function of the state alone.
+
+`active_only=True` sends only from the vertices that changed in the
+previous superstep (GraphX's active set). It is correct when the
+merge is idempotent and apply is monotone (min, max, or): a vertex
+that did not change would resend what its neighbours already folded
+in. Sums (katz, Markov mass) need every vertex to send each round.
+
+Loops that stay separate, and why:
+  * bfs and sssp keep a lazy union of per-level leaves; re-checkpointing
+    the full state every level would copy O(n·depth) rows.
+  * kcore.core_numbers joins its state on `dst` so the h-index window
+    reuses the fixture's `src` partitioning. Joining on `src`, as this
+    loop does, adds a hash exchange per round (4 → 5 exchanges in the
+    executed plan, counting the state broadcast); persisting a
+    reversed projection loses the partitioning too.
+  * pagerank turns its state into a plan leaf every second round, so
+    two iterations share one job.
+  * kcore.k_core and components.connected_components_stars carry edge
+    sets, not vertex state.
 """
 
 from __future__ import annotations
@@ -40,7 +63,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from graph500_spark.functions.confscope import scoped_session_confs
-from graph500_spark.functions.plantrunc import truncate_plan_lazy
+from graph500_spark.functions.plantrunc import cached, truncate_plan_lazy
 from graph500_spark.functions.sizing import resolve_shuffle_partitions
 
 
@@ -51,74 +74,99 @@ def pregel(
     send: Callable[[DataFrame], DataFrame],
     merge: Sequence[Column],
     apply_fn: Callable[[DataFrame, DataFrame], DataFrame],
-    n_supersteps: int = 10,
-    until_unchanged: bool = False,
+    n_supersteps: int | None = 10,
+    active_only: bool = False,
     broadcast_rows: int = 2_000_000,
     shuffle_partitions: int | str | None = "auto",
     edge_count: int | None = None,
 ) -> DataFrame:
     """Run the superstep loop and return the final vertex-state
-    DataFrame (a checkpoint leaf). ``shuffle_partitions="auto"``
-    applies the ~2M-rows/partition rule (functions/sizing.py) from
-    ``edge_count`` when given, else from a count of the cached edge
-    table (whose materialization the first superstep pays anyway);
-    the override engages only above the session width."""
-    # The edge table is stationary across supersteps — cache it so the
-    # upstream construction doesn't re-execute per round.
-    edges = edges.persist()
-    sp_override = resolve_shuffle_partitions(
-        spark, shuffle_partitions, edge_count, edges.count
-    )
-    with scoped_session_confs(
-        spark, {"spark.sql.shuffle.partitions": sp_override}
-    ):
-        # lazy checkpoint + count = one driver barrier (guide §1.2/§5)
-        state = vertices.transform(truncate_plan_lazy)
-        n_state = state.count()
-        for _ in range(n_supersteps):
-            src_state = state.withColumnRenamed("vertex", "src")
-            if n_state <= broadcast_rows:
-                src_state = F.broadcast(src_state)
-            inbox = (
-                send(edges.join(src_state, "src"))
-                .groupBy("vertex")
-                .agg(*merge)
-            )
-            # lazy checkpoint: the per-superstep readout below (count
-            # or fixpoint probe) materializes the new state in the
-            # SAME job — one driver barrier per superstep, not two.
-            new_state = apply_fn(state, inbox).transform(
-                truncate_plan_lazy
-            )
-            if until_unchanged:
-                # Fixpoint test on exact state equality. Both sides are
-                # checkpoint leaves, and the state count rides along as
-                # a 1-row cross join so the readout is ONE job per
-                # superstep instead of two (driver barriers are the
-                # per-superstep floor at every scale).
-                row = (
-                    new_state.agg(F.count(F.lit(1)).alias("n"))
-                    .crossJoin(
-                        new_state.exceptAll(state)
-                        .limit(1)
-                        .agg(F.count(F.lit(1)).alias("chg"))
-                    )
-                    .first()
+    DataFrame [vertex, <state cols>] over a checkpoint leaf.
+    ``shuffle_partitions="auto"`` applies the ~2M-rows/partition rule
+    (functions/sizing.py) from ``edge_count`` when given, else from a
+    count of the cached edge table (whose materialization the first
+    superstep pays anyway); the override engages only above the
+    session width."""
+    with cached(edges) as edges:
+        sp_override = resolve_shuffle_partitions(
+            spark, shuffle_partitions, edge_count, edges.count
+        )
+        with scoped_session_confs(
+            spark, {"spark.sql.shuffle.partitions": sp_override}
+        ):
+            state = vertices.transform(truncate_plan_lazy)
+            n_active = state.count()
+            active = state
+            step = 0
+            while n_supersteps is None or step < n_supersteps:
+                step += 1
+                src_state = active.withColumnRenamed("vertex", "src")
+                if n_active <= broadcast_rows:
+                    src_state = F.broadcast(src_state)
+                inbox = (
+                    send(edges.join(src_state, "src"))
+                    .groupBy("vertex")
+                    .agg(*merge)
                 )
-                changed = row["chg"]
-                n_state = row["n"]
-                old = state
-                state = new_state
-                old.unpersist()
-                if changed == 0:
+                # lazy: the readout below materializes the new state
+                # in the SAME job — one driver barrier per superstep
+                new_state = apply_fn(state, inbox).transform(
+                    truncate_plan_lazy
+                )
+                row = new_state.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum(F.col("chg").cast("long")).alias("chg"),
+                ).first()
+                state = new_state.drop("chg")
+                if not row["chg"]:
                     break
-            else:
-                n_state = new_state.count()
-                old = state
-                state = new_state
-                old.unpersist()
-    edges.unpersist()
+                if active_only:
+                    active = new_state.filter("chg").drop("chg")
+                    n_active = row["chg"]
+                else:
+                    active, n_active = state, row["n"]
     return state
+
+
+def propagate_extreme(
+    spark: SparkSession,
+    edges: DataFrame,
+    labels: DataFrame,
+    pick: Callable[..., Column],
+    n_supersteps: int | None = None,
+    shuffle_partitions: int | None = None,
+    broadcast_rows: int = 2_000_000,
+) -> DataFrame:
+    """[vertex, label] after ``n_supersteps`` (None = at the fixpoint)
+    of label(v) ← pick(label(v), labels of v's in-neighbours), from
+    the initial ``labels`` [vertex, label] over [src, dst] ``edges``.
+    ``pick`` is ``F.least`` or ``F.greatest``: an idempotent merge, so
+    only the vertices that changed send (``active_only``)."""
+    merge = {F.least: F.min, F.greatest: F.max}[pick]
+
+    # The label table LEFT JOIN the per-vertex merged messages, not a
+    # union + full re-aggregation: the only shuffle is the aggregation
+    # of the (changed-set-sized) messages.
+    def apply_fn(old: DataFrame, inbox: DataFrame) -> DataFrame:
+        new = pick("label", F.coalesce("msg", "label"))
+        return old.join(inbox, "vertex", "left").select(
+            "vertex", new.alias("label"), (new != F.col("label")).alias("chg")
+        )
+
+    return pregel(
+        spark,
+        edges,
+        labels,
+        lambda j: j.select(
+            F.col("dst").alias("vertex"), F.col("label").alias("msg")
+        ),
+        [merge("msg").alias("msg")],
+        apply_fn,
+        n_supersteps=n_supersteps,
+        active_only=True,
+        broadcast_rows=broadcast_rows,
+        shuffle_partitions=shuffle_partitions,
+    )
 
 
 def label_propagation(
@@ -132,37 +180,17 @@ def label_propagation(
     neighbor labelₜ)) — the deterministic fixed-round variant, so a
     DuckDB oracle can unroll it (plans/queries.py::label_propagation_sql).
     Converges to label = max vertex id of the connected component —
-    the max-dual of operators/components.py, expressed as a Pregel
-    vertex program to exercise the generic loop."""
+    the max-dual of operators/components.py."""
     verts = (
         edges_clean.select(F.col("src").alias("vertex"))
         .distinct()
         .withColumn("label", F.col("vertex"))
     )
-
-    def send(edges_with_state: DataFrame) -> DataFrame:
-        return edges_with_state.select(
-            F.col("dst").alias("vertex"), F.col("label").alias("msg")
-        )
-
-    def apply_fn(old: DataFrame, inbox: DataFrame) -> DataFrame:
-        return (
-            old.join(inbox, "vertex", "left")
-            .select(
-                "vertex",
-                F.greatest(
-                    "label", F.coalesce("max_msg", F.col("label"))
-                ).alias("label"),
-            )
-        )
-
-    return pregel(
+    return propagate_extreme(
         spark,
         edges_clean.select("src", "dst"),
         verts,
-        send,
-        [F.max("msg").alias("max_msg")],
-        apply_fn,
+        F.greatest,
         n_supersteps=n_supersteps,
         shuffle_partitions=shuffle_partitions,
     )

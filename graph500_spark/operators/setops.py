@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from graph500_spark.functions.plantrunc import (
+    cached,
     truncate_plan,
     truncate_plan_lazy,
 )
@@ -74,85 +75,85 @@ def maximal_independent_set(
         .select("vertex", pr.alias("p"))
         .transform(truncate_plan_lazy)
     )
-    edges = edges_clean.select("src", "dst").persist()
-    mis_parts: list[DataFrame] = []
-    # Checkpointed state carries no stats, so every join against the
-    # stationary edge table would otherwise shuffle it 4x per round;
-    # the driver knows the remaining count from the previous round's
-    # readout and injects broadcast() while it fits (bfs.py
-    # discipline) — the per-round shuffles then reduce to the one
-    # grouped min over the live edges.
-    n_remaining = remaining.count()
-    for _ in range(max_rounds):
-        if n_remaining == 0:
-            break
-        rem = (
-            F.broadcast(remaining)
-            if n_remaining <= broadcast_rows
-            else remaining
-        )
-        live_edges = (
-            edges.join(
-                rem.select(F.col("vertex").alias("src")), "src",
-                "left_semi",
-            ).join(
-                rem.select(F.col("vertex").alias("dst")), "dst",
-                "left_semi",
-            )
-        )
-        nb_min = (
-            live_edges.join(
-                rem.select(
-                    F.col("vertex").alias("dst"), F.col("p").alias("pd")
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("vertex"))
-            .agg(F.min("pd").alias("min_nb_p"))
-        )
-        winners = (
-            remaining.join(nb_min, "vertex", "left")
-            .filter(
-                F.col("min_nb_p").isNull()
-                | (F.col("p") < F.col("min_nb_p"))
-            )
-            .select("vertex")
-            # lazy in the broadcast regime: the (blocking) winners
-            # broadcast build materializes it before its other
-            # consumers run — no standalone checkpoint job. Past
-            # broadcast_rows keep eager (multiple consumers, no
-            # blocking build ⇒ double-compute risk).
-            .transform(
-                truncate_plan_lazy
+    with cached(edges_clean.select("src", "dst")) as edges:
+        mis_parts: list[DataFrame] = []
+        # Checkpointed state carries no stats, so every join against the
+        # stationary edge table would otherwise shuffle it 4x per round;
+        # the driver knows the remaining count from the previous round's
+        # readout and injects broadcast() while it fits (bfs.py
+        # discipline) — the per-round shuffles then reduce to the one
+        # grouped min over the live edges.
+        n_remaining = remaining.count()
+        for _ in range(max_rounds):
+            if n_remaining == 0:
+                break
+            rem = (
+                F.broadcast(remaining)
                 if n_remaining <= broadcast_rows
-                else truncate_plan
+                else remaining
             )
-        )
-        mis_parts.append(winners)
-        win = (
-            F.broadcast(winners)
-            if n_remaining <= broadcast_rows
-            else winners
-        )
-        dropped = winners.unionAll(
-            edges.join(
-                win.withColumnRenamed("vertex", "src"), "src",
-                "left_semi",
-            ).select(F.col("dst").alias("vertex"))
-        )
-        # lazy checkpoint + count = one driver barrier per round
-        nxt = remaining.join(
-            dropped, "vertex", "left_anti"
-        ).transform(truncate_plan_lazy)
-        n_remaining = nxt.count()
-        remaining = nxt
-        if n_remaining == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"maximal_independent_set did not converge in {max_rounds} rounds"
-        )
-    edges.unpersist()
+            live_edges = (
+                edges.join(
+                    rem.select(F.col("vertex").alias("src")), "src",
+                    "left_semi",
+                ).join(
+                    rem.select(F.col("vertex").alias("dst")), "dst",
+                    "left_semi",
+                )
+            )
+            nb_min = (
+                live_edges.join(
+                    rem.select(
+                        F.col("vertex").alias("dst"), F.col("p").alias("pd")
+                    ),
+                    "dst",
+                )
+                .groupBy(F.col("src").alias("vertex"))
+                .agg(F.min("pd").alias("min_nb_p"))
+            )
+            winners = (
+                remaining.join(nb_min, "vertex", "left")
+                .filter(
+                    F.col("min_nb_p").isNull()
+                    | (F.col("p") < F.col("min_nb_p"))
+                )
+                .select("vertex")
+                # lazy in the broadcast regime: the (blocking) winners
+                # broadcast build materializes it before its other
+                # consumers run — no standalone checkpoint job. Past
+                # broadcast_rows keep eager (multiple consumers, no
+                # blocking build ⇒ double-compute risk).
+                .transform(
+                    truncate_plan_lazy
+                    if n_remaining <= broadcast_rows
+                    else truncate_plan
+                )
+            )
+            mis_parts.append(winners)
+            win = (
+                F.broadcast(winners)
+                if n_remaining <= broadcast_rows
+                else winners
+            )
+            dropped = winners.unionAll(
+                edges.join(
+                    win.withColumnRenamed("vertex", "src"), "src",
+                    "left_semi",
+                ).select(F.col("dst").alias("vertex"))
+            )
+            # lazy checkpoint + count = one driver barrier per round
+            nxt = remaining.join(
+                dropped, "vertex", "left_anti"
+            ).transform(truncate_plan_lazy)
+            n_remaining = nxt.count()
+            remaining = nxt
+            if n_remaining == 0:
+                break
+        else:
+            raise RuntimeError(
+                "maximal_independent_set did not converge in"
+                f" {max_rounds} rounds"
+            )
     out = mis_parts[0]
     for part in mis_parts[1:]:
         out = out.unionAll(part)

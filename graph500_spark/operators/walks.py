@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from graph500_spark.functions.plantrunc import (
+    cached,
     truncate_plan,
     truncate_plan_lazy,
 )
@@ -52,50 +53,49 @@ def random_walks(
     """[walk_id, step, vertex]: one walk per vertex (walk_id = start
     vertex), steps 0..walk_len inclusive. On a symmetrized graph no
     walk dead-ends (every vertex has a neighbor)."""
-    edges = edges_clean.select("src", "dst").persist()
-    frontier = (
-        edges.select(F.col("src").alias("vertex"))
-        .distinct()
-        .withColumn("walk_id", F.col("vertex"))
-        # lazy checkpoint + count = one driver barrier (guide §1.2/§5)
-        .transform(truncate_plan_lazy)
-    )
-    n = frontier.count()
-    out = frontier.select("walk_id", F.lit(0).alias("step"), "vertex")
+    with cached(edges_clean.select("src", "dst")) as edges:
+        frontier = (
+            edges.select(F.col("src").alias("vertex"))
+            .distinct()
+            .withColumn("walk_id", F.col("vertex"))
+            # lazy checkpoint + count = one driver barrier (guide §1.2/§5)
+            .transform(truncate_plan_lazy)
+        )
+        n = frontier.count()
+        out = frontier.select("walk_id", F.lit(0).alias("step"), "vertex")
 
-    for step in range(1, walk_len + 1):
-        f_side = frontier.select(
-            F.col("vertex").alias("src"), "walk_id"
-        )
-        if n <= broadcast_rows:
-            f_side = F.broadcast(f_side)
-        packed = (
-            edges.join(f_side, "src")
-            .groupBy("walk_id")
-            .agg(
-                F.min(
-                    _score(F.col("walk_id"), step, F.col("dst"))
-                    * F.lit(_PACK_SHIFT)
-                    + F.col("dst")
-                ).alias("pick")
+        for step in range(1, walk_len + 1):
+            f_side = frontier.select(
+                F.col("vertex").alias("src"), "walk_id"
             )
-        )
-        # lazy when the frontier broadcasts (the blocking build
-        # materializes it before the out-union's second reference);
-        # eager otherwise — two consumers, no blocking barrier.
-        frontier = packed.select(
-            "walk_id",
-            (F.col("pick") % F.lit(_PACK_SHIFT)).alias("vertex"),
-        ).transform(
-            truncate_plan_lazy if n <= broadcast_rows else truncate_plan
-        )
-        out = out.unionByName(
-            frontier.select(
-                "walk_id", F.lit(step).alias("step"), "vertex"
+            if n <= broadcast_rows:
+                f_side = F.broadcast(f_side)
+            packed = (
+                edges.join(f_side, "src")
+                .groupBy("walk_id")
+                .agg(
+                    F.min(
+                        _score(F.col("walk_id"), step, F.col("dst"))
+                        * F.lit(_PACK_SHIFT)
+                        + F.col("dst")
+                    ).alias("pick")
+                )
             )
-        )
-    edges.unpersist()
-    return out
+            # lazy when the frontier broadcasts (the blocking build
+            # materializes it before the out-union's second reference);
+            # eager otherwise — two consumers, no blocking barrier.
+            frontier = packed.select(
+                "walk_id",
+                (F.col("pick") % F.lit(_PACK_SHIFT)).alias("vertex"),
+            ).transform(
+                truncate_plan_lazy if n <= broadcast_rows else truncate_plan
+            )
+            out = out.unionByName(
+                frontier.select(
+                    "walk_id", F.lit(step).alias("step"), "vertex"
+                )
+            )
+        return out
 
 
 def neighbor_sample(
@@ -120,45 +120,44 @@ def neighbor_sample(
     (seed, vertex), so diamond fan-in does not re-expand; ties on
     hash scores break to the smaller neighbor id via the packed
     encoding."""
-    edges = edges_clean.select("src", "dst").persist()
     from pyspark.sql.window import Window
 
-    seeds = (
-        edges.select(F.col("src").alias("vertex"))
-        .distinct()
-        .select(F.col("vertex").alias("seed"), "vertex")
-        .transform(truncate_plan)
-    )
-    frontier = seeds
-    out = None
-    for layer, k in enumerate(fanout, start=1):
-        cand = edges.join(
-            frontier.select(F.col("vertex").alias("src"), "seed"),
-            "src",
-        ).select(
-            "seed",
-            "src",
-            "dst",
-            (
-                _score(F.col("seed") * F.lit(31) + F.col("src"),
-                       layer, F.col("dst"))
-                * F.lit(_PACK_SHIFT)
-                + F.col("dst")
-            ).alias("rank_key"),
-        )
-        w = Window.partitionBy("seed", "src").orderBy("rank_key")
-        picked = (
-            cand.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("seed", F.lit(layer).alias("layer"), "src", "dst")
+    with cached(edges_clean.select("src", "dst")) as edges:
+        seeds = (
+            edges.select(F.col("src").alias("vertex"))
+            .distinct()
+            .select(F.col("vertex").alias("seed"), "vertex")
             .transform(truncate_plan)
         )
-        out = picked if out is None else out.unionByName(picked)
-        frontier = picked.select(
-            "seed", F.col("dst").alias("vertex")
-        ).distinct()
-    edges.unpersist()
-    return out
+        frontier = seeds
+        out = None
+        for layer, k in enumerate(fanout, start=1):
+            cand = edges.join(
+                frontier.select(F.col("vertex").alias("src"), "seed"),
+                "src",
+            ).select(
+                "seed",
+                "src",
+                "dst",
+                (
+                    _score(F.col("seed") * F.lit(31) + F.col("src"),
+                           layer, F.col("dst"))
+                    * F.lit(_PACK_SHIFT)
+                    + F.col("dst")
+                ).alias("rank_key"),
+            )
+            w = Window.partitionBy("seed", "src").orderBy("rank_key")
+            picked = (
+                cand.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") <= k)
+                .select("seed", F.lit(layer).alias("layer"), "src", "dst")
+                .transform(truncate_plan)
+            )
+            out = picked if out is None else out.unionByName(picked)
+            frontier = picked.select(
+                "seed", F.col("dst").alias("vertex")
+            ).distinct()
+        return out
 
 
 def neighbor_sample_sql(
@@ -230,62 +229,61 @@ def node2vec_walks(
         # packed encoding headroom: score (< 1e9) x mult x 2^24 must
         # stay inside int64 (ANSI overflow would throw mid-walk)
         raise ValueError("bias multipliers must be in [1, 256]")
-    edges = edges_clean.select("src", "dst").persist()
-    frontier = (
-        edges.select(F.col("src").alias("vertex"))
-        .distinct()
-        .select(
-            F.col("vertex").alias("walk_id"),
-            F.col("vertex").alias("cur"),
-            F.lit(-1).cast("long").alias("prev"),
-        )
-        .transform(truncate_plan)
-    )
-    n = frontier.count()
-    out = frontier.select(
-        "walk_id", F.lit(0).alias("step"), F.col("cur").alias("vertex")
-    )
-    adj_probe = edges.select(
-        F.col("src").alias("prev"),
-        F.col("dst").alias("dst"),
-        F.lit(1).alias("is_adj"),
-    )
-    for step in range(1, walk_len + 1):
-        f_side = frontier.select(
-            F.col("cur").alias("src"), "walk_id", "prev"
-        )
-        if n <= broadcast_rows:
-            f_side = F.broadcast(f_side)
-        cand = edges.join(f_side, "src").join(
-            adj_probe, ["prev", "dst"], "left"
-        )
-        mult = (
-            F.when(F.col("dst") == F.col("prev"), F.lit(p_mult))
-            .when(F.col("is_adj").isNotNull(), F.lit(1))
-            .otherwise(F.lit(q_mult))
-        )
-        packed = cand.groupBy("walk_id").agg(
-            F.min(
-                _score(F.col("walk_id"), step, F.col("dst"))
-                * mult
-                * F.lit(_PACK_SHIFT)
-                + F.col("dst")
-            ).alias("pick"),
-            F.min(F.col("src")).alias("cur_was"),
-        )
-        frontier = packed.select(
-            "walk_id",
-            (F.col("pick") % F.lit(_PACK_SHIFT)).alias("cur"),
-            F.col("cur_was").alias("prev"),
-        ).transform(truncate_plan)
-        out = out.unionByName(
-            frontier.select(
-                "walk_id", F.lit(step).alias("step"),
-                F.col("cur").alias("vertex"),
+    with cached(edges_clean.select("src", "dst")) as edges:
+        frontier = (
+            edges.select(F.col("src").alias("vertex"))
+            .distinct()
+            .select(
+                F.col("vertex").alias("walk_id"),
+                F.col("vertex").alias("cur"),
+                F.lit(-1).cast("long").alias("prev"),
             )
+            .transform(truncate_plan)
         )
-    edges.unpersist()
-    return out
+        n = frontier.count()
+        out = frontier.select(
+            "walk_id", F.lit(0).alias("step"), F.col("cur").alias("vertex")
+        )
+        adj_probe = edges.select(
+            F.col("src").alias("prev"),
+            F.col("dst").alias("dst"),
+            F.lit(1).alias("is_adj"),
+        )
+        for step in range(1, walk_len + 1):
+            f_side = frontier.select(
+                F.col("cur").alias("src"), "walk_id", "prev"
+            )
+            if n <= broadcast_rows:
+                f_side = F.broadcast(f_side)
+            cand = edges.join(f_side, "src").join(
+                adj_probe, ["prev", "dst"], "left"
+            )
+            mult = (
+                F.when(F.col("dst") == F.col("prev"), F.lit(p_mult))
+                .when(F.col("is_adj").isNotNull(), F.lit(1))
+                .otherwise(F.lit(q_mult))
+            )
+            packed = cand.groupBy("walk_id").agg(
+                F.min(
+                    _score(F.col("walk_id"), step, F.col("dst"))
+                    * mult
+                    * F.lit(_PACK_SHIFT)
+                    + F.col("dst")
+                ).alias("pick"),
+                F.min(F.col("src")).alias("cur_was"),
+            )
+            frontier = packed.select(
+                "walk_id",
+                (F.col("pick") % F.lit(_PACK_SHIFT)).alias("cur"),
+                F.col("cur_was").alias("prev"),
+            ).transform(truncate_plan)
+            out = out.unionByName(
+                frontier.select(
+                    "walk_id", F.lit(step).alias("step"),
+                    F.col("cur").alias("vertex"),
+                )
+            )
+        return out
 
 
 def node2vec_walks_sql(

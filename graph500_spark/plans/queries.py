@@ -529,8 +529,12 @@ def teps_summary_sql() -> str:
 # ---------------------------------------------------------------------------
 
 def _register_views(spark: SparkSession, sf_dir: str) -> None:
+    # drop + create, not createOrReplaceTempView: replacing a view with
+    # a different plan (another sf_dir) uncaches every cached frame
+    # that reads the old view — the construct-once graph caches below.
     for name in td.TABLES:
-        td.load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+        spark.catalog.dropTempView(name)
+        td.load_table(spark, sf_dir, name).createTempView(name)
 
 
 def hetero_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1431,6 +1431,7 @@ def markov_stationary(
         .select(
             "vertex",
             F.coalesce("msg", F.lit(0)).cast("long").alias("p_q"),
+            (F.coalesce("msg", F.lit(0)) != F.col("p_q")).alias("chg"),
         ),
         n_supersteps=n_iterations,
     )

@@ -1,0 +1,59 @@
+"""Cache ownership: an operator must never drop a cache its caller
+holds. ``g.select("src", "dst")`` on a cached ``(src, dst)`` graph is
+the cached plan itself, so an operator that persists and later
+unpersists that projection would uncache the caller's graph. The same
+holds for the registry's construct-once fixtures, whose cache must
+survive the temp views being registered for another directory."""
+
+from __future__ import annotations
+
+import shutil
+
+import pytest
+from pyspark import StorageLevel
+
+from graph500_spark.operators import centrality, components, kcore
+from graph500_spark.operators import pagerank, pregel
+from graph500_spark.operators.graph_build import build_clean_edges
+from graph500_spark.plans import queries as Q
+
+from tests.conftest import SF_SMALL
+
+OPERATORS = {
+    "core_numbers": lambda spark, g: kcore.core_numbers(g),
+    "label_propagation": lambda spark, g: pregel.label_propagation(spark, g),
+    "pagerank": lambda spark, g: pagerank.pagerank(spark, g),
+    "katz_centrality": lambda spark, g: centrality.katz_centrality(spark, g),
+    "strongly_connected_components": lambda spark, g: (
+        components.strongly_connected_components(spark, g)
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(OPERATORS))
+def test_operator_keeps_callers_cache(spark, op):
+    pairs = [(0, 1), (1, 2), (2, 0), (2, 3), (10, 11)]
+    g = build_clean_edges(
+        spark.createDataFrame(pairs, "src long, dst long")
+    ).persist()
+    try:
+        g.count()
+        OPERATORS[op](spark, g).collect()
+        assert g.storageLevel != StorageLevel.NONE, "caller's cache dropped"
+    finally:
+        g.unpersist()
+
+
+def test_fixture_cache_survives_other_directory(spark, tmp_path):
+    a, b = tmp_path / "a", tmp_path / "b"
+    shutil.copytree(SF_SMALL, a)
+    shutil.copytree(SF_SMALL, b)
+    mod997 = Q.clean_mod997_graph(spark, str(a))
+    assert mod997.storageLevel != StorageLevel.NONE
+    hetero = Q.clean_hetero_graph(spark, str(b))
+    try:
+        assert mod997.storageLevel != StorageLevel.NONE
+        assert hetero.storageLevel != StorageLevel.NONE
+    finally:
+        mod997.unpersist()
+        hetero.unpersist()

@@ -1,17 +1,19 @@
-"""Fault injection for conf-scoped operators: a Spark job that fails
-inside an operator's loop must not leave the process-wide conf lock
-held or the scoped session conf changed."""
+"""Fault injection for conf-scoped and edge-caching operators: a Spark
+job that fails inside an operator's loop must not leave the
+process-wide conf lock held, the scoped session conf changed, or the
+operator's edge cache behind."""
 
 from __future__ import annotations
 
 import threading
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.operators import bfs as bfs_mod
-from graph500_spark.operators import components, pregel
+from graph500_spark.operators import components, kcore, pagerank, pregel
 
 KEY = "spark.sql.shuffle.partitions"
 
@@ -37,6 +39,10 @@ OPERATORS = {
     "label_propagation": lambda spark, e: pregel.label_propagation(
         spark, e, shuffle_partitions=3
     ),
+    "core_numbers": lambda spark, e: kcore.core_numbers(e),
+    "pagerank": lambda spark, e: pagerank.pagerank(
+        spark, e, shuffle_partitions=3
+    ),
 }
 
 
@@ -44,8 +50,10 @@ OPERATORS = {
 def test_failed_job_releases_conf_lock(spark, op):
     before = spark.conf.get(KEY)
     assert before != "3"
+    e = _poisoned_edges(spark)
     with pytest.raises(Exception, match="injected fault"):
-        OPERATORS[op](spark, _poisoned_edges(spark))
+        OPERATORS[op](spark, e)
+    assert e.select("src", "dst").storageLevel == StorageLevel.NONE
 
     # The lock is an RLock, so re-entering it on this thread would
     # succeed even if it leaked: a second thread has to take it.

@@ -7,9 +7,11 @@ from __future__ import annotations
 
 import warnings
 
+import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from graph500_spark.functions.plantrunc import truncate_plan
+from graph500_spark.functions.plantrunc import cached, truncate_plan
 
 
 def _size_in_bytes(df) -> int:
@@ -58,3 +60,26 @@ def test_stats_reset_vs_plain_checkpoint_blowup(spark):
     assert clean_digits[-1] == clean_digits[0]
     assert plain_digits[-1] > plain_digits[0]
     assert clean_digits[-1] < plain_digits[-1]
+
+
+def test_cached_releases_only_what_it_persisted(spark):
+    df = spark.range(10).select(F.col("id").alias("src"))
+    with cached(df) as c:
+        assert c.storageLevel != StorageLevel.NONE
+    assert df.storageLevel == StorageLevel.NONE
+
+    df.persist()
+    try:
+        with cached(df.select("src")):
+            pass
+        assert df.storageLevel != StorageLevel.NONE
+    finally:
+        df.unpersist()
+
+
+def test_cached_releases_on_failure(spark):
+    df = spark.range(10).select((F.col("id") * 3).alias("x"))
+    with pytest.raises(RuntimeError):
+        with cached(df):
+            raise RuntimeError("job failed")
+    assert df.storageLevel == StorageLevel.NONE

@@ -31,33 +31,82 @@ class TestLabelPropagation:
         labels = {r.vertex: r.label for r in out.collect()}
         assert labels[0] == 1 and labels[3] == 4 and labels[4] == 4
 
-    def test_until_unchanged_stops_at_fixpoint(self, spark):
-        g = [(0, 1), (1, 2)]
-        edges = _clean(spark, g)
+    def test_unbounded_run_stops_at_fixpoint(self, spark):
+        edges = _clean(spark, [(0, 1), (1, 2)])
         verts = (
             edges.select(F.col("src").alias("vertex"))
             .distinct()
             .withColumn("label", F.col("vertex"))
         )
+        sends = []
+
+        def send(e):
+            sends.append(1)  # the driver builds one send per superstep
+            return e.select(
+                F.col("dst").alias("vertex"), F.col("label").alias("msg")
+            )
+
+        def apply_fn(old, inbox):
+            new = F.greatest("label", F.coalesce("max_msg", F.col("label")))
+            return old.join(inbox, "vertex", "left").select(
+                "vertex",
+                new.alias("label"),
+                (new != F.col("label")).alias("chg"),
+            )
+
         out = pregel(
             spark,
             edges.select("src", "dst"),
             verts,
-            lambda e: e.select(
-                F.col("dst").alias("vertex"), F.col("label").alias("msg")
-            ),
+            send,
             [F.max("msg").alias("max_msg")],
-            lambda old, inbox: old.join(inbox, "vertex", "left").select(
-                "vertex",
-                F.greatest(
-                    "label", F.coalesce("max_msg", F.col("label"))
-                ).alias("label"),
-            ),
-            n_supersteps=50,  # fixpoint exit must fire long before 50
-            until_unchanged=True,
+            apply_fn,
+            n_supersteps=None,
         )
         assert {r.vertex: r.label for r in out.collect()} == {
             0: 2,
             1: 2,
             2: 2,
         }
+        # two supersteps change labels, the third sees no change
+        assert len(sends) == 3
+
+    def test_changing_state_runs_every_superstep(self, spark):
+        """A sum program whose state changes every superstep runs
+        exactly ``n_supersteps`` of them, matching a driver-side loop."""
+        edges = _clean(spark, [(0, 1), (1, 2)])
+        verts = spark.createDataFrame(
+            [(v, 0) for v in range(3)], "vertex: long, x: long"
+        )
+        sends = []
+
+        def send(e):
+            sends.append(1)
+            return e.select(
+                F.col("dst").alias("vertex"), F.col("x").alias("msg")
+            )
+
+        def apply_fn(old, inbox):
+            new = F.col("x") + 1 + F.coalesce("msg", F.lit(0))
+            return old.join(inbox, "vertex", "left").select(
+                "vertex",
+                new.cast("long").alias("x"),
+                (new != F.col("x")).alias("chg"),
+            )
+
+        out = pregel(
+            spark,
+            edges.select("src", "dst"),
+            verts,
+            send,
+            [F.sum("msg").alias("msg")],
+            apply_fn,
+            n_supersteps=4,
+            active_only=False,
+        )
+        x = {0: 0, 1: 0, 2: 0}
+        nbrs = {0: [1], 1: [0, 2], 2: [1]}
+        for _ in range(4):
+            x = {v: x[v] + 1 + sum(x[u] for u in nbrs[v]) for v in x}
+        assert {r.vertex: r.x for r in out.collect()} == x
+        assert len(sends) == 4
