@@ -187,7 +187,9 @@ def build_clean_edges(
     the declared LongType after the in-partition symmetrize, so the
     output schema and values are bit-identical (int32 casts are exact
     below 2^31, dedup on the casted pairs equals dedup on the longs
-    because the cast is injective there). Ignored on payload inputs.
+    because the cast is injective there). The bound is checked in the
+    same projection: an id outside ``[0, max_id]`` raises instead of
+    wrapping. Ignored on payload inputs.
     """
     narrow = max_id is not None and 0 <= int(max_id) < 2**31
     if set(edges_raw.columns) == {"src", "dst"}:
@@ -196,8 +198,19 @@ def build_clean_edges(
             F.greatest("src", "dst").alias("dst"),
         )
         if narrow:
+            # src <= dst here, so one test covers the whole bound; a
+            # raise_error, not a wrap (ANSI off casts modulo 2^32)
+            in_bound = (F.col("src") >= 0) & (F.col("dst") <= max_id)
+            bad = F.format_string(
+                "build_clean_edges: edge (%d, %d) outside max_id bound"
+                f" [0, {int(max_id)}]",
+                "src",
+                "dst",
+            )
             canonical = canonical.select(
-                F.col("src").cast("int").alias("src"),
+                F.when(in_bound, F.col("src").cast("int"))
+                .otherwise(F.raise_error(bad))
+                .alias("src"),
                 F.col("dst").cast("int").alias("dst"),
             )
         both = F.explode(

@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import truncate_plan_lazy
 from graph500_spark.functions.sizing import resolve_shuffle_partitions
+from graph500_spark.operators.validate import violation_summary
 
 DIST_SCHEMA = T.StructType(
     [
@@ -322,19 +323,14 @@ def validate_sssp(
     nglobalverts: int,
 ) -> DataFrame:
     """All four checks → [check: string, violations: long] summary
-    (same reporting convention as validate.validate_bfs)."""
-    checks = {
-        "dist_ranges": check_dist_ranges(dist_df, nglobalverts),
-        "root_dist": check_root_dist(dist_df, root),
-        "tree_weights": check_tree_weights(edges_weighted, dist_df, root),
-        "no_relaxable_edge": check_no_relaxable_edge(
-            edges_weighted, dist_df
-        ),
-    }
-    out = None
-    for name, df in checks.items():
-        one = df.agg(F.count(F.lit(1)).alias("violations")).select(
-            F.lit(name).alias("check"), "violations"
-        )
-        out = one if out is None else out.unionByName(one)
-    return out
+    (``validate.violation_summary``, as for ``validate_bfs``)."""
+    return violation_summary(
+        {
+            "dist_ranges": check_dist_ranges(dist_df, nglobalverts),
+            "root_dist": check_root_dist(dist_df, root),
+            "tree_weights": check_tree_weights(edges_weighted, dist_df, root),
+            "no_relaxable_edge": check_no_relaxable_edge(
+                edges_weighted, dist_df
+            ),
+        }
+    )

@@ -60,19 +60,23 @@ def triangles(edges_clean: DataFrame) -> DataFrame:
     """[a, b, c]: every triangle exactly once (a→b→c in orientation
     order).
 
-    The oriented edge table is persisted: it feeds all three join
-    branches (ab/bc/ac) and Catalyst does not common-subexpression
-    across plan branches, so without the cache the whole
+    The oriented edge table is a lazy checkpoint leaf: it feeds all
+    three join branches (ab/bc/ac) and Catalyst does not
+    common-subexpression across plan branches, so without it the whole
     clean→degree→orient subtree (2 shuffles + the source scan) runs
-    three times."""
+    three times. The first action on the result materializes it; its
+    blocks are reclaimed with the returned frame (ContextCleaner), so
+    no CacheManager entry outlives the call, unlike a ``persist()``
+    that nothing could release."""
     # The wedge join's fan-out stage inherits the oriented table's
     # layout when the other branches broadcast; a narrow persisted
     # fixture would run the O(|E|^{3/2}) compute on a fraction of the
-    # machine — widen to full parallelism before the persist, probing
-    # the INPUT layout (cached fixture: plan-only, no job; guide §2.5).
+    # machine — widen to full parallelism before the checkpoint,
+    # probing the INPUT layout (cached fixture: plan-only, no job;
+    # guide §2.5).
     oriented = widen_narrow_input(
         orient_edges(edges_clean), "lo", probe=edges_clean
-    ).persist()
+    ).transform(truncate_plan_lazy)
     ab = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     bc = oriented.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
     ac = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("c"))

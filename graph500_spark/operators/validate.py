@@ -1,5 +1,5 @@
 """BFS-result validation — the reference's 5 spec checks as DataFrame
-queries (SURVEY.md §3.3; /root/reference/mpi/validate.hpp:489-802).
+queries (SURVEY.md §3.3; mpi/validate.hpp:489-802).
 
 Data model: ``pred_df`` is the unpacked predecessor map
 ``[vertex: long, pred: long|null, depth: int|null]`` — NULL pred/depth
@@ -12,42 +12,235 @@ Each check returns a DataFrame of violation rows (empty == pass);
 product operators (J3/J4/A5/A6) and the engine's own test oracle,
 exactly as in the reference.
 
+One definition per check, keyed like ``bfs._bfs_levels``: every
+private builder takes a ``key`` list naming the columns that tell
+independent trees apart — ``[]`` for one tree (the root is
+``F.lit(root)``) and ``["root"]`` for a multi-root table ``[root,
+vertex, pred, depth]`` from ``bfs_multi`` (the root is
+``F.col("root")``). Every join runs on ``[*key, ...]``, so a
+single-root plan carries no constant key column: the optimized plans
+of the five ``check_*`` functions, ``validate_bfs`` and
+``edge_visit_count`` are what a check written for one tree compiles
+to. The batched forms (``validate_bfs_multi``,
+``edge_visit_counts_multi``) are the same builders with key
+``["root"]``, so their per-root counts are ``validate_bfs`` /
+``edge_visit_count`` on each root's slice by construction.
+
+``violation_summary`` is the one [check, violations] reducer (also
+used by ``sssp.validate_sssp``): ``groupBy(*key).agg(count)`` per
+check, joined by a union. For key ``[]`` that is one global count per
+check; for key ``["root"]`` a roots × checks grid is left-joined on so
+that a clean root reports 0. The single-root summary keeps this form
+on measurement: a union of labelled rows → ``groupBy("check")`` → left
+join against the check list cut ``validate_bfs`` + its count from 10
+to 7 jobs but raised the median from 1.83 s to 2.38 s (local[4], kron
+s14, seeds (2, 3), 3 roots × 4 reps, order alternating).
+
 Scale notes: every check is 1-2 equi-joins + a filter — shuffle joins
 on vertex id that AQE can re-plan; pred_df is usually far smaller than
-the edge list, so Catalyst broadcasts it when it fits.
+the edge list, so Catalyst broadcasts it when it fits. Check 4 needs
+every (edge, tree) pair: for key ``["root"]`` the edge list is
+cross-joined with the broadcast root list (n_roots × |E| rows, exactly
+the work the reference does, mpi/main.cc:129-146 validates every root
+over the full edge list).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _claims(pred_df: DataFrame, r: Column) -> DataFrame:
+    """Reached non-root rows: each claims the tree edge (v, pred[v])."""
+    return pred_df.filter((F.col("vertex") != r) & F.col("pred").isNotNull())
+
+
+def _value_ranges(
+    pred_df: DataFrame, key: list[str], nglobalverts: int
+) -> DataFrame:
+    return pred_df.filter(
+        F.col("pred").isNotNull()
+        & ((F.col("pred") < 0) | (F.col("pred") >= F.lit(nglobalverts)))
+    ).select(*key, "vertex", "pred", "depth")
+
+
+def _root_and_self_parents(
+    pred_df: DataFrame, key: list[str], r: Column
+) -> DataFrame:
+    bad_root = pred_df.filter(
+        (F.col("vertex") == r) & (F.col("pred") != F.col("vertex"))
+    )
+    self_parent = _claims(pred_df, r).filter(
+        F.col("pred") == F.col("vertex")
+    )
+    return bad_root.unionByName(self_parent).select(
+        *key, "vertex", "pred", "depth"
+    )
+
+
+def _depth_consistency(
+    pred_df: DataFrame, key: list[str], r: Column
+) -> DataFrame:
+    cols = [*key, "vertex", "pred", "depth"]
+    null_mismatch = pred_df.filter(
+        F.col("pred").isNull() != F.col("depth").isNull()
+    ).select(*cols, F.lit("null_mismatch").alias("why"))
+
+    bad_root_depth = pred_df.filter(
+        (F.col("vertex") == r) & (F.col("depth") != F.lit(0))
+    ).select(*cols, F.lit("root_depth").alias("why"))
+
+    parent = pred_df.select(
+        *[F.col(k).alias(f"p_{k}") for k in key],
+        F.col("vertex").alias("p_vertex"),
+        F.col("depth").alias("p_depth"),
+    )
+    on = F.col("pred") == F.col("p_vertex")
+    for k in key:
+        on = on & (F.col(k) == F.col(f"p_{k}"))
+    bad_step = (
+        _claims(pred_df, r)
+        .join(parent, on, "left")
+        .filter(
+            F.col("p_depth").isNull()  # parent unreached or missing
+            | (F.col("depth") != F.col("p_depth") + F.lit(1))
+        )
+        .select(*cols, F.lit("depth_step").alias("why"))
+    )
+    return null_mismatch.unionByName(bad_root_depth).unionByName(bad_step)
+
+
+def _edge_depths(
+    edges_raw: DataFrame, pred_df: DataFrame, key: list[str]
+) -> DataFrame:
+    """J3: annotate every raw edge with both endpoint depths (two joins)
+    and keep the rows that break check 4."""
+    depth = pred_df.select(*key, "vertex", "depth")
+    src_d = depth.select(
+        *key, F.col("vertex").alias("src"), F.col("depth").alias("src_depth")
+    )
+    dst_d = depth.select(
+        *key, F.col("vertex").alias("dst"), F.col("depth").alias("dst_depth")
+    )
+    edges = edges_raw.select("src", "dst")
+    if key:
+        edges = edges.crossJoin(F.broadcast(pred_df.select(*key).distinct()))
+    return (
+        edges.join(src_d, [*key, "src"], "left")
+        .join(dst_d, [*key, "dst"], "left")
+        .filter(
+            (F.col("src_depth").isNull() != F.col("dst_depth").isNull())
+            | (
+                F.col("src_depth").isNotNull()
+                & F.col("dst_depth").isNotNull()
+                & (F.abs(F.col("src_depth") - F.col("dst_depth")) > 1)
+            )
+        )
+        .select(*key, "src", "dst", "src_depth", "dst_depth")
+    )
+
+
+def _tree_edges(
+    edges_raw: DataFrame, pred_df: DataFrame, key: list[str], r: Column
+) -> DataFrame:
+    sym = edges_raw.select("src", "dst").unionByName(
+        edges_raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    claims = _claims(pred_df, r).select(*key, "vertex", "pred", "depth")
+    return claims.join(
+        sym,
+        (claims.vertex == sym.src) & (claims.pred == sym.dst),
+        "left_anti",
+    )
+
+
+def _edge_visit_counts(
+    edges_raw: DataFrame, pred_df: DataFrame, key: list[str]
+) -> DataFrame:
+    """[*key, edge_visit_count]: raw edges with both endpoints reached.
+
+    edges ⋈ reach(src) fans out to at most |E| x n_trees rows (exactly
+    the rows a per-root loop scans in total), then one (key, dst) join
+    and one key-grouped count with map-side partials. An inner join,
+    not a semi-join, on dst: for key ``[]`` that is the plan the
+    left-join-and-filter form compiles to, and a semi-join would be
+    pushed into every branch of a unioned edge list."""
+    reach = pred_df.filter(F.col("depth").isNotNull())
+    reach_src = reach.select(*key, F.col("vertex").alias("src"))
+    reach_dst = reach.select(*key, F.col("vertex").alias("dst"))
+    return (
+        edges_raw.select("src", "dst")
+        .join(reach_src, "src")
+        .join(reach_dst, [*key, "dst"])
+        .groupBy(*key)
+        .agg(F.count(F.lit(1)).alias("edge_visit_count"))
+    )
+
+
+def _bfs_checks(
+    edges_raw: DataFrame,
+    pred_df: DataFrame,
+    key: list[str],
+    root: int | None,
+    nglobalverts: int,
+) -> dict[str, DataFrame]:
+    r = F.col("root") if key else F.lit(root)
+    return {
+        "value_ranges": _value_ranges(pred_df, key, nglobalverts),
+        "root_self_parents": _root_and_self_parents(pred_df, key, r),
+        "depth_consistency": _depth_consistency(pred_df, key, r),
+        "edge_depths": _edge_depths(edges_raw, pred_df, key),
+        "tree_edges": _tree_edges(edges_raw, pred_df, key, r),
+    }
+
+
+def violation_summary(
+    checks: dict[str, DataFrame], keys: DataFrame | None = None
+) -> DataFrame:
+    """[check, violations] per named violation-row frame; with a
+    ``keys`` frame, [*keys.columns, check, violations] for every
+    ``keys`` row, grouping each check on those columns (a key with no
+    violation rows reports 0)."""
+    key = [] if keys is None else keys.columns
+    out = None
+    for name, df in checks.items():
+        one = (
+            df.groupBy(*key)
+            .agg(F.count(F.lit(1)).alias("violations"))
+            .select(*key, F.lit(name).alias("check"), "violations")
+        )
+        out = one if out is None else out.unionByName(one)
+    if not key:
+        return out
+    names = keys.sparkSession.createDataFrame(
+        [(n,) for n in checks], "check string"
+    )
+    return (
+        keys.crossJoin(F.broadcast(names))
+        .join(out, [*key, "check"], "left")
+        .select(
+            *key,
+            "check",
+            F.coalesce("violations", F.lit(0)).alias("violations"),
+        )
+    )
 
 
 def check_value_ranges(pred_df: DataFrame, nglobalverts: int) -> DataFrame:
     """Check 1: every non-null parent id in [0, nglobalverts).
 
-    Ref: check_value_ranges, /root/reference/mpi/validate.hpp:822-839.
+    Ref: check_value_ranges, mpi/validate.hpp:822-839.
     """
-    return pred_df.filter(
-        F.col("pred").isNotNull()
-        & ((F.col("pred") < 0) | (F.col("pred") >= F.lit(nglobalverts)))
-    ).select("vertex", "pred", "depth")
+    return _value_ranges(pred_df, [], nglobalverts)
 
 
 def check_root_and_self_parents(pred_df: DataFrame, root: int) -> DataFrame:
     """Check 2: pred[root]==root; no non-root vertex is its own parent.
 
-    Ref: /root/reference/mpi/validate.hpp:530-571.
+    Ref: mpi/validate.hpp:530-571.
     """
-    bad_root = pred_df.filter(
-        (F.col("vertex") == F.lit(root)) & (F.col("pred") != F.col("vertex"))
-    )
-    self_parent = pred_df.filter(
-        (F.col("vertex") != F.lit(root))
-        & F.col("pred").isNotNull()
-        & (F.col("pred") == F.col("vertex"))
-    )
-    return bad_root.unionByName(self_parent).select("vertex", "pred", "depth")
+    return _root_and_self_parents(pred_df, [], F.lit(root))
 
 
 def check_depth_consistency(pred_df: DataFrame, root: int) -> DataFrame:
@@ -57,99 +250,16 @@ def check_depth_consistency(pred_df: DataFrame, root: int) -> DataFrame:
     (check_bfs_depth_map_using_predecessors, validate.hpp:920-995)
     re-expressed as a self-join on the pred table.
     """
-    null_mismatch = pred_df.filter(
-        F.col("pred").isNull() != F.col("depth").isNull()
-    ).select("vertex", "pred", "depth", F.lit("null_mismatch").alias("why"))
-
-    bad_root_depth = pred_df.filter(
-        (F.col("vertex") == F.lit(root)) & (F.col("depth") != F.lit(0))
-    ).select("vertex", "pred", "depth", F.lit("root_depth").alias("why"))
-
-    parent = pred_df.select(
-        F.col("vertex").alias("p_vertex"), F.col("depth").alias("p_depth")
-    )
-    bad_step = (
-        pred_df.filter(
-            (F.col("vertex") != F.lit(root)) & F.col("pred").isNotNull()
-        )
-        .join(parent, F.col("pred") == F.col("p_vertex"), "left")
-        .filter(
-            F.col("p_depth").isNull()  # parent unreached or missing
-            | (F.col("depth") != F.col("p_depth") + F.lit(1))
-        )
-        .select("vertex", "pred", "depth", F.lit("depth_step").alias("why"))
-    )
-    return null_mismatch.unionByName(bad_root_depth).unionByName(bad_step)
-
-
-def _edge_with_depths(edges_raw: DataFrame, pred_df: DataFrame) -> DataFrame:
-    """J3: annotate every raw edge with both endpoint depths (two joins)."""
-    depth = pred_df.select("vertex", "depth")
-    src_d = depth.select(
-        F.col("vertex").alias("src"), F.col("depth").alias("src_depth")
-    )
-    dst_d = depth.select(
-        F.col("vertex").alias("dst"), F.col("depth").alias("dst_depth")
-    )
-    return edges_raw.join(src_d, "src", "left").join(dst_d, "dst", "left")
+    return _depth_consistency(pred_df, [], F.lit(root))
 
 
 def check_edge_depths(edges_raw: DataFrame, pred_df: DataFrame) -> DataFrame:
     """Check 4: no edge connects a reached and an unreached vertex, and
     endpoint depths differ by at most 1.
 
-    Ref: /root/reference/mpi/validate.hpp:703-721 (error branches).
+    Ref: mpi/validate.hpp:703-721 (error branches).
     """
-    e = _edge_with_depths(edges_raw, pred_df)
-    return e.filter(
-        (F.col("src_depth").isNull() != F.col("dst_depth").isNull())
-        | (
-            F.col("src_depth").isNotNull()
-            & F.col("dst_depth").isNotNull()
-            & (F.abs(F.col("src_depth") - F.col("dst_depth")) > 1)
-        )
-    ).select("src", "dst", "src_depth", "dst_depth")
-
-
-def edge_visit_count(edges_raw: DataFrame, pred_df: DataFrame) -> DataFrame:
-    """A5 (TEPS numerator): count raw input edges — including duplicates
-    and self-loops — whose endpoints are both in the BFS tree.
-
-    Ref: edge_visit_count, /root/reference/mpi/validate.hpp:703-721.
-    """
-    e = _edge_with_depths(edges_raw, pred_df)
-    return e.filter(
-        F.col("src_depth").isNotNull() & F.col("dst_depth").isNotNull()
-    ).agg(F.count(F.lit(1)).alias("edge_visit_count"))
-
-
-def edge_visit_counts_multi(
-    edges_raw: DataFrame, pred_multi: DataFrame
-) -> DataFrame:
-    """[root, edge_visit_count] — A5 batched over a multi-root pred
-    table ``[root, vertex, ...]``: per root, raw input edges
-    (including duplicates and self-loops) with both endpoints in that
-    root's tree. ONE dataflow instead of n_roots sequential two-join
-    jobs — the spec64 harness counted 64 TEPS numerators as 64
-    driver-scheduled jobs, and the per-job floor dominates the batch.
-
-    Shape: edges ⋈ reach(src) fans out to at most |E| x n_roots rows
-    (exactly the rows the sequential loop scans in total), then one
-    (root, dst) semi-join and one root-keyed count with map-side
-    partials. Per-root values identical to ``edge_visit_count``.
-
-    Ref: edge_visit_count, /root/reference/mpi/validate.hpp:703-721,
-    batched over the runs of mpi/main.cc:129-146.
-    """
-    reach_src = pred_multi.select("root", F.col("vertex").alias("src"))
-    reach_dst = pred_multi.select("root", F.col("vertex").alias("dst"))
-    return (
-        edges_raw.select("src", "dst")
-        .join(reach_src, "src")
-        .join(reach_dst, ["root", "dst"], "left_semi")
-        .groupBy("root")
-        .agg(F.count(F.lit(1)).cast("long").alias("edge_visit_count"))
-    )
+    return _edge_depths(edges_raw, pred_df, [])
 
 
 def check_tree_edges(
@@ -158,20 +268,34 @@ def check_tree_edges(
     """Check 5: every (v, pred[v]) of a reached non-root vertex exists as
     a graph edge (in either orientation of the raw undirected list).
 
-    Ref: pred_valid marking, /root/reference/mpi/validate.hpp:722-792.
+    Ref: pred_valid marking, mpi/validate.hpp:722-792.
     Implemented as a left-anti join against the symmetrized edge set.
     """
-    sym = edges_raw.select("src", "dst").unionByName(
-        edges_raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    claims = pred_df.filter(
-        (F.col("vertex") != F.lit(root)) & F.col("pred").isNotNull()
-    ).select("vertex", "pred", "depth")
-    return claims.join(
-        sym,
-        (claims.vertex == sym.src) & (claims.pred == sym.dst),
-        "left_anti",
-    )
+    return _tree_edges(edges_raw, pred_df, [], F.lit(root))
+
+
+def edge_visit_count(edges_raw: DataFrame, pred_df: DataFrame) -> DataFrame:
+    """A5 (TEPS numerator): count raw input edges — including duplicates
+    and self-loops — whose endpoints are both in the BFS tree.
+
+    Ref: edge_visit_count, mpi/validate.hpp:703-721.
+    """
+    return _edge_visit_counts(edges_raw, pred_df, [])
+
+
+def edge_visit_counts_multi(
+    edges_raw: DataFrame, pred_multi: DataFrame
+) -> DataFrame:
+    """[root, edge_visit_count] — A5 batched over a multi-root pred
+    table ``[root, vertex, ...]``: per root, the ``edge_visit_count``
+    of that root's tree, in ONE dataflow instead of n_roots sequential
+    jobs (the spec64 harness counted 64 TEPS numerators as 64
+    driver-scheduled jobs, and the per-job floor dominates the batch).
+
+    Ref: edge_visit_count, mpi/validate.hpp:703-721, batched over the
+    runs of mpi/main.cc:129-146.
+    """
+    return _edge_visit_counts(edges_raw, pred_multi, ["root"])
 
 
 def validate_bfs_multi(
@@ -181,137 +305,14 @@ def validate_bfs_multi(
     ``[root, vertex, pred, depth]`` → [root, check, violations] —
     one dataflow for all roots instead of 5 × n_roots sequential
     passes (the spec64 harness validates 64 trees; per-root looping
-    pays the per-query scheduling floor 320 times).
-
-    Semantics are row-for-row identical to ``validate_bfs`` applied
-    per root: checks 1-3 and 5 group naturally by the root column
-    (the parent lookup of check 3 self-joins on (root, pred)); check
-    4 and the reference's "every edge inspected per run" contract
-    need every (edge, root) pair, produced by a broadcast crossJoin
-    of the root list (n_roots × |E| rows — exactly the work the
-    reference does, mpi/main.cc:129-146 validates every root over
-    the full edge list). Roots absent from a check's violation set
-    report violations = 0 via the final left join against the root
-    list (ref driver: validate_bfs_result, validate.hpp:1008-1019).
+    pays the per-query scheduling floor 320 times). Counts equal
+    ``validate_bfs`` on each root's slice; a root with no violations
+    of a check reports 0 (ref driver: validate_bfs_result,
+    validate.hpp:1008-1019).
     """
-    roots_df = pred_multi.select("root").distinct()
-
-    v1 = (
-        pred_multi.filter(
-            F.col("pred").isNotNull()
-            & (
-                (F.col("pred") < 0)
-                | (F.col("pred") >= F.lit(nglobalverts))
-            )
-        )
-        .select("root", F.lit("value_ranges").alias("check"))
-    )
-    v2 = (
-        pred_multi.filter(
-            (
-                (F.col("vertex") == F.col("root"))
-                & (F.col("pred") != F.col("vertex"))
-            )
-            | (
-                (F.col("vertex") != F.col("root"))
-                & F.col("pred").isNotNull()
-                & (F.col("pred") == F.col("vertex"))
-            )
-        )
-        .select("root", F.lit("root_self_parents").alias("check"))
-    )
-    parent = pred_multi.select(
-        F.col("root").alias("p_root"),
-        F.col("vertex").alias("p_vertex"),
-        F.col("depth").alias("p_depth"),
-    )
-    bad_step = (
-        pred_multi.filter(
-            (F.col("vertex") != F.col("root")) & F.col("pred").isNotNull()
-        )
-        .join(
-            parent,
-            (F.col("pred") == F.col("p_vertex"))
-            & (F.col("root") == F.col("p_root")),
-            "left",
-        )
-        .filter(
-            F.col("p_depth").isNull()
-            | (F.col("depth") != F.col("p_depth") + F.lit(1))
-        )
-        .select("root")
-    )
-    v3 = (
-        pred_multi.filter(
-            (F.col("pred").isNull() != F.col("depth").isNull())
-            | (
-                (F.col("vertex") == F.col("root"))
-                & (F.col("depth") != F.lit(0))
-            )
-        )
-        .select("root")
-        .unionByName(bad_step)
-        .select("root", F.lit("depth_consistency").alias("check"))
-    )
-    depth = pred_multi.select("root", "vertex", "depth")
-    src_d = depth.select(
-        "root", F.col("vertex").alias("src"), F.col("depth").alias("src_depth")
-    )
-    dst_d = depth.select(
-        "root", F.col("vertex").alias("dst"), F.col("depth").alias("dst_depth")
-    )
-    expanded = (
-        edges_raw.select("src", "dst")
-        .crossJoin(F.broadcast(roots_df))
-        .join(src_d, ["root", "src"], "left")
-        .join(dst_d, ["root", "dst"], "left")
-    )
-    v4 = expanded.filter(
-        (F.col("src_depth").isNull() != F.col("dst_depth").isNull())
-        | (
-            F.col("src_depth").isNotNull()
-            & F.col("dst_depth").isNotNull()
-            & (F.abs(F.col("src_depth") - F.col("dst_depth")) > 1)
-        )
-    ).select("root", F.lit("edge_depths").alias("check"))
-    sym = edges_raw.select("src", "dst").unionByName(
-        edges_raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    claims = pred_multi.filter(
-        (F.col("vertex") != F.col("root")) & F.col("pred").isNotNull()
-    ).select("root", "vertex", "pred")
-    v5 = claims.join(
-        sym,
-        (claims.vertex == sym.src) & (claims.pred == sym.dst),
-        "left_anti",
-    ).select("root", F.lit("tree_edges").alias("check"))
-
-    violations = (
-        v1.unionByName(v2)
-        .unionByName(v3)
-        .unionByName(v4)
-        .unionByName(v5)
-        .groupBy("root", "check")
-        .agg(F.count(F.lit(1)).cast("long").alias("violations"))
-    )
-    checks = roots_df.crossJoin(
-        F.broadcast(
-            edges_raw.sparkSession.createDataFrame(
-                [
-                    ("value_ranges",),
-                    ("root_self_parents",),
-                    ("depth_consistency",),
-                    ("edge_depths",),
-                    ("tree_edges",),
-                ],
-                "check string",
-            )
-        )
-    )
-    return checks.join(violations, ["root", "check"], "left").select(
-        "root",
-        "check",
-        F.coalesce("violations", F.lit(0)).cast("long").alias("violations"),
+    return violation_summary(
+        _bfs_checks(edges_raw, pred_multi, ["root"], None, nglobalverts),
+        pred_multi.select("root").distinct(),
     )
 
 
@@ -320,22 +321,11 @@ def validate_bfs(
 ) -> DataFrame:
     """All five checks → [check: string, violations: long] summary.
 
-    Ref driver: validate_bfs_result, /root/reference/mpi/validate.hpp:1008-1019.
+    Ref driver: validate_bfs_result, mpi/validate.hpp:1008-1019.
     Unlike the reference (which aborts on first failing check), this
     reports every check's violation count as rows — friendlier for a
     relational engine and strictly more informative.
     """
-    checks = {
-        "value_ranges": check_value_ranges(pred_df, nglobalverts),
-        "root_self_parents": check_root_and_self_parents(pred_df, root),
-        "depth_consistency": check_depth_consistency(pred_df, root),
-        "edge_depths": check_edge_depths(edges_raw, pred_df),
-        "tree_edges": check_tree_edges(edges_raw, pred_df, root),
-    }
-    out = None
-    for name, df in checks.items():
-        one = df.agg(F.count(F.lit(1)).alias("violations")).select(
-            F.lit(name).alias("check"), "violations"
-        )
-        out = one if out is None else out.unionByName(one)
-    return out
+    return violation_summary(
+        _bfs_checks(edges_raw, pred_df, [], root, nglobalverts)
+    )

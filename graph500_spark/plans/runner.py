@@ -56,6 +56,35 @@ def _append_run_row(
     ).write.mode("append").parquet(results_path)
 
 
+def _check_trees(
+    edges_raw: DataFrame,
+    pred: DataFrame,
+    tree_roots: list[int],
+    nverts: int,
+    check: bool,
+) -> dict[int, float]:
+    """{root: edge_visit_count} for the BFS trees in ``pred`` — one
+    tree ``[vertex, pred, depth]`` from ``bfs`` or a ``root``-keyed
+    table from ``bfs_multi``; with ``check``, raises unless all five
+    spec checks pass for every tree."""
+    if "root" in pred.columns:
+        summary = validate.validate_bfs_multi(edges_raw, pred, nverts)
+        counts = validate.edge_visit_counts_multi(edges_raw, pred)
+    else:
+        (root,) = tree_roots
+        summary = validate.validate_bfs(edges_raw, pred, root, nverts)
+        counts = validate.edge_visit_count(edges_raw, pred).select(
+            F.lit(root).alias("root"), "edge_visit_count"
+        )
+    if check:
+        bad = summary.filter(F.col("violations") > 0).collect()
+        if bad:
+            raise AssertionError(
+                f"BFS validation failed for roots {tree_roots}: {bad}"
+            )
+    return {r["root"]: float(r["edge_visit_count"]) for r in counts.collect()}
+
+
 def run_benchmark(
     spark: SparkSession,
     scale: int,
@@ -68,13 +97,18 @@ def run_benchmark(
     """The full pipeline at a given SCALE. num_roots=64 is spec mode,
     16 is the reference's own --test mode (run-benchmark.py:112).
 
-    ``validation`` — True runs the 5-check validator per root inside
-    the timing loop (spec-strict, mpi/main.cc:129-146); "batched"
-    runs ONE multi-root validation pass over all pred trees after the
-    timed runs (``validate.validate_bfs_multi`` — same checks, same
-    zero-violation gate, 5 dataflows total instead of 5 × n_roots;
-    validate_time is then reported as the batch wall divided across
-    runs); False skips validation (timing-only runs).
+    ``validation`` — True runs the 5 spec checks on every tree inside
+    the timing loop (spec-strict, mpi/main.cc:129-146); "batched" runs
+    ONE multi-root validation pass over all pred trees after the timed
+    runs (same checks, same zero-violation gate, 5 dataflows total
+    instead of 5 × n_roots; validate_time is then the pass's wall
+    divided across runs); False skips the checks (timing-only runs)
+    but still counts each tree's TEPS edges. Every mode goes through
+    ``_check_trees``: ``validate.validate_bfs`` + ``edge_visit_count``
+    for a single-root tree, ``validate_bfs_multi`` +
+    ``edge_visit_counts_multi`` for a root-keyed table — the same
+    keyed checks (operators/validate.py), so per-root results do not
+    depend on the mode or the batch width.
 
     ``root_batch`` > 1 runs the BFS phase in batches of that many
     roots through one shared multi-source frontier
@@ -82,9 +116,10 @@ def run_benchmark(
     roots at s16, since the per-level scheduling floor is paid once
     per batch instead of once per root. Per-root results (pred tree,
     validation, edge counts) are identical to sequential runs;
-    bfs_time is then the batch wall time divided by the batch width
-    (amortized — spec-strict per-root timing requires root_batch=1,
-    the default)."""
+    bfs_time is then the batch wall time divided by the batch width,
+    and so is validate_time in strict mode, since the batch's trees
+    are validated in one keyed pass (amortized — spec-strict per-root
+    timing requires root_batch=1, the default)."""
     nverts = 1 << scale
 
     edges_raw = generator.generate_kronecker_edges(spark, scale, edgefactor)
@@ -122,112 +157,75 @@ def run_benchmark(
         for i in range(0, len(pending), max(1, root_batch))
     ]
 
-    batched_validation = validation == "batched"
-    kept_preds: list[DataFrame] = []
-    for batch in batches:
-        t0 = time.monotonic()
-        if len(batch) == 1:
-            run_id, root = batch[0]
-            pred_all = (
-                bfs_mod.bfs(
-                    spark,
-                    edges_clean,
-                    root,
-                    prepartition=False,
-                    edge_count=n_clean,
-                )
-                .withColumn("root", F.lit(int(root)))
-                .persist()
-            )
-        else:
-            pred_all = bfs_mod.bfs_multi(
-                spark,
-                edges_clean,
-                [root for _, root in batch],
-                prepartition=False,
-                edge_count=n_clean,
-            ).persist()
-        pred_all.count()
-        bfs_time = (time.monotonic() - t0) / len(batch)
-
-        for run_id, root in batch:
-            if batched_validation:
-                # validation AND the per-root TEPS numerator are both
-                # deferred to the single multi-root pass below — the
-                # sequential per-root edge_visit_count jobs (64 driver-
-                # scheduled two-join jobs in spec mode) were the
-                # harness's dominant non-BFS cost
-                result.runs.append(
-                    {
-                        "run_id": run_id,
-                        "root": root,
-                        "bfs_time": bfs_time,
-                        "validate_time": 0.0,
-                        "edge_count": 0.0,
-                        "teps": 0.0,
-                    }
-                )
-                continue
-            pred = pred_all.filter(F.col("root") == int(root)).drop("root")
-            t1 = time.monotonic()
-            if validation is True:
-                summary = validate.validate_bfs(edges_raw, pred, root, nverts)
-                bad = summary.filter(F.col("violations") > 0).count()
-                if bad:
-                    raise AssertionError(
-                        f"BFS validation failed for root {root}: "
-                        + str(summary.collect())
-                    )
-            ec = validate.edge_visit_count(edges_raw, pred).collect()[0][
-                "edge_visit_count"
-            ]
-            validate_time = time.monotonic() - t1
-
+    def record(timed: list[tuple], counts: dict, validate_time: float):
+        for run_id, root, bfs_time in timed:
+            ec = counts.get(root, 0.0)
             row = {
                 "run_id": run_id,
                 "root": root,
                 "bfs_time": bfs_time,
                 "validate_time": validate_time,
-                "edge_count": float(ec),
-                "teps": float(ec) / bfs_time if bfs_time > 0 else 0.0,
+                "edge_count": ec,
+                "teps": ec / bfs_time if bfs_time > 0 else 0.0,
             }
             result.runs.append(row)
             if results_path is not None:
                 _append_run_row(spark, results_path, row)
-        if batched_validation:
-            kept_preds.append(pred_all)  # unpersisted after the pass
-        else:
-            pred_all.unpersist()
 
-    if batched_validation and kept_preds:
+    kept_preds: list[DataFrame] = []
+    deferred: list[tuple] = []
+    for batch in batches:
+        batch_roots = [root for _, root in batch]
+        t0 = time.monotonic()
+        if len(batch) == 1:
+            pred = bfs_mod.bfs(
+                spark,
+                edges_clean,
+                batch_roots[0],
+                prepartition=False,
+                edge_count=n_clean,
+            )
+        else:
+            pred = bfs_mod.bfs_multi(
+                spark,
+                edges_clean,
+                batch_roots,
+                prepartition=False,
+                edge_count=n_clean,
+            )
+        pred = pred.persist()
+        pred.count()
+        bfs_time = (time.monotonic() - t0) / len(batch)
+        timed = [(run_id, root, bfs_time) for run_id, root in batch]
+
+        if validation == "batched":
+            # validation AND the per-root TEPS numerator are both
+            # deferred to the single multi-root pass below — the
+            # sequential per-root edge_visit_count jobs (64 driver-
+            # scheduled two-join jobs in spec mode) were the
+            # harness's dominant non-BFS cost
+            if "root" not in pred.columns:
+                pred = pred.withColumn("root", F.lit(int(batch_roots[0])))
+            kept_preds.append(pred)  # unpersisted after the pass
+            deferred += timed
+            continue
+        t1 = time.monotonic()
+        counts = _check_trees(
+            edges_raw, pred, batch_roots, nverts, validation is True
+        )
+        record(timed, counts, (time.monotonic() - t1) / len(batch))
+        pred.unpersist()
+
+    if kept_preds:
         t1 = time.monotonic()
         pred_multi = kept_preds[0]
         for p in kept_preds[1:]:
             pred_multi = pred_multi.unionByName(p)
-        summary = validate.validate_bfs_multi(edges_raw, pred_multi, nverts)
-        bad = summary.filter(F.col("violations") > 0)
-        if bad.limit(1).count():
-            raise AssertionError(
-                "BFS validation failed (batched): " + str(bad.collect())
-            )
-        # all 64 TEPS numerators in ONE dataflow (root-keyed count)
-        ec_map = {
-            r["root"]: float(r["edge_visit_count"])
-            for r in validate.edge_visit_counts_multi(
-                edges_raw, pred_multi
-            ).collect()
-        }
-        per_run = (time.monotonic() - t1) / max(1, len(result.runs))
-        for row in result.runs:
-            row["validate_time"] += per_run
-            ec = ec_map.get(row["root"], 0.0)
-            row["edge_count"] = ec
-            row["teps"] = (
-                ec / row["bfs_time"] if row["bfs_time"] > 0 else 0.0
-            )
-        if results_path is not None:
-            for row in result.runs:
-                _append_run_row(spark, results_path, row)
+        deferred_roots = [root for _, root, _ in deferred]
+        counts = _check_trees(
+            edges_raw, pred_multi, deferred_roots, nverts, True
+        )
+        record(deferred, counts, (time.monotonic() - t1) / len(deferred))
         for p in kept_preds:
             p.unpersist()
 

@@ -252,48 +252,94 @@ class TestBfsMulti:
         g.unpersist()
 
 
-def test_validate_bfs_multi_matches_per_root_and_fires(spark):
-    """Batched multi-root validator (spec64's benchmark-mode gate):
-    per-(root, check) violation counts identical to validate_bfs run
-    per root, zero on real trees, non-zero on injected corruption."""
-    raw = generator.generate_kronecker_edges(spark, 7, 8).persist()
-    clean = gb.build_clean_edges(raw).persist()
+@pytest.fixture(scope="module")
+def multi_trees(spark):
+    """kron s7 raw edges + a 3-root ``bfs_multi`` table, persisted."""
     from graph500_spark.operators import roots as roots_mod
 
+    raw = generator.generate_kronecker_edges(spark, 7, 8).persist()
+    clean = gb.build_clean_edges(raw).persist()
     rts = roots_mod.find_roots(spark, raw, 1 << 7, num_roots=3)
     pm = bfs_mod.bfs_multi(spark, clean, rts, prepartition=False).persist()
+    yield raw, rts, pm
+    pm.unpersist()
+    clean.unpersist()
+    raw.unpersist()
+
+
+# The five corruption shapes of test_validators_fire_on_corrupted_fixtures
+# plus a root depth != 0, as (tree vertex to corrupt, column, new value,
+# check that must fire); "d1"/"d2" are the least vertex at depth 1/2 of
+# the corrupted tree.
+MULTI_CORRUPTIONS = {
+    "out_of_range_pred": (
+        "d1", "pred", lambda t: F.lit(99 + (1 << 7)), "value_ranges"
+    ),
+    "self_parent": (
+        "d1", "pred", lambda t: F.col("vertex"), "root_self_parents"
+    ),
+    "root_parent": (
+        "root", "pred", lambda t: F.lit(t["d1"]), "root_self_parents"
+    ),
+    "depth_gap": ("d1", "depth", lambda t: F.lit(9), "depth_consistency"),
+    "root_depth": ("root", "depth", lambda t: F.lit(7), "depth_consistency"),
+    "phantom_edge": ("d2", "pred", lambda t: F.lit(t["root"]), "tree_edges"),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(MULTI_CORRUPTIONS))
+def test_validate_bfs_multi_matches_per_root_and_fires(
+    spark, multi_trees, shape
+):
+    """Batched multi-root validator (spec64's benchmark-mode gate):
+    one corruption injected into one root's tree fires for that root
+    only, and every (root, check) count equals validate_bfs on that
+    root's slice."""
+    raw, rts, pm = multi_trees
+    target = rts[sorted(MULTI_CORRUPTIONS).index(shape) % len(rts)]
+    rows = pm.filter(F.col("root") == int(target)).collect()
+    tree = {"root": target}
+    for d in (1, 2):
+        tree[f"d{d}"] = min(r["vertex"] for r in rows if r["depth"] == d)
+    where, col, value, fires = MULTI_CORRUPTIONS[shape]
+    bad = pm.withColumn(
+        col,
+        F.when(
+            (F.col("root") == int(target))
+            & (F.col("vertex") == int(tree[where])),
+            value(tree),
+        ).otherwise(F.col(col)),
+    )
     multi = {
         (r["root"], r["check"]): r["violations"]
-        for r in V.validate_bfs_multi(raw, pm, 1 << 7).collect()
+        for r in V.validate_bfs_multi(raw, bad, 1 << 7).collect()
     }
     assert len(multi) == 5 * len(rts)
-    assert all(v == 0 for v in multi.values()), multi
+    assert multi[(target, fires)] > 0, multi
+    assert all(v == 0 for (root, _), v in multi.items() if root != target)
     for root in rts:
         single = V.validate_bfs(
             raw,
-            pm.filter(F.col("root") == int(root)).drop("root"),
+            bad.filter(F.col("root") == int(root)).drop("root"),
             root,
             1 << 7,
         ).collect()
         for r in single:
-            assert multi[(root, r["check"])] == r["violations"]
-    # corrupt one tree's root depth: that root (and ONLY that root)
-    # must report depth_consistency + edge_depths violations
-    bad = pm.withColumn(
-        "depth",
-        F.when(
-            (F.col("root") == int(rts[0]))
-            & (F.col("vertex") == F.col("root")),
-            F.lit(7),
-        ).otherwise(F.col("depth")),
-    )
-    viol = {
-        (r["root"], r["check"]): r["violations"]
-        for r in V.validate_bfs_multi(raw, bad, 1 << 7).collect()
-        if r["violations"] > 0
+            assert multi[(root, r["check"])] == r["violations"], (root, r)
+
+
+def test_validate_bfs_multi_clean_trees(spark, multi_trees):
+    """Real trees: every (root, check) reports 0, and the batched TEPS
+    numerators equal edge_visit_count per root."""
+    raw, rts, pm = multi_trees
+    multi = V.validate_bfs_multi(raw, pm, 1 << 7).collect()
+    assert len(multi) == 5 * len(rts)
+    assert all(r["violations"] == 0 for r in multi), multi
+    counts = {
+        r["root"]: r["edge_visit_count"]
+        for r in V.edge_visit_counts_multi(raw, pm).collect()
     }
-    assert viol and all(root == rts[0] for root, _ in viol)
-    assert any(c == "depth_consistency" for _, c in viol)
-    pm.unpersist()
-    clean.unpersist()
-    raw.unpersist()
+    for root in rts:
+        one = pm.filter(F.col("root") == int(root)).drop("root")
+        want = V.edge_visit_count(raw, one).collect()[0]["edge_visit_count"]
+        assert counts[root] == want

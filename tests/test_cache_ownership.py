@@ -13,8 +13,9 @@ import pytest
 from pyspark import StorageLevel
 
 from graph500_spark.operators import centrality, components, kcore
-from graph500_spark.operators import pagerank, pregel
+from graph500_spark.operators import pagerank, pregel, triangles
 from graph500_spark.operators.graph_build import build_clean_edges
+from graph500_spark.functions.sizing import widen_narrow_input
 from graph500_spark.plans import queries as Q
 
 from tests.conftest import SF_SMALL
@@ -42,6 +43,19 @@ def test_operator_keeps_callers_cache(spark, op):
         assert g.storageLevel != StorageLevel.NONE, "caller's cache dropped"
     finally:
         g.unpersist()
+
+
+def test_triangles_leaves_no_cache(spark):
+    """The oriented edge table ``triangles`` shares between its three
+    join branches must not stay in the CacheManager after the call."""
+    g = build_clean_edges(
+        spark.createDataFrame(
+            [(0, 1), (1, 2), (2, 0), (2, 3), (3, 0)], "src long, dst long"
+        )
+    )
+    assert triangles.triangles(g).count() == 2
+    oriented = widen_narrow_input(triangles.orient_edges(g), "lo", probe=g)
+    assert oriented.storageLevel == StorageLevel.NONE
 
 
 def test_fixture_cache_survives_other_directory(spark, tmp_path):

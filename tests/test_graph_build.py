@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.operators import graph_build as gb
 
 
@@ -40,6 +41,22 @@ def test_build_clean_edges_invariants(edges):
     assert rows == {
         (1, 2), (2, 1), (2, 4), (4, 2), (4, 5), (5, 4), (5, 1), (1, 5)
     }
+
+
+@pytest.mark.parametrize("bad_id", [2**31 + 5, -3])
+def test_max_id_bound_violation_raises(spark, edges, bad_id):
+    """An id outside [0, max_id] must fail the job, also with ANSI off,
+    where the int32 cast would wrap 2^31 + 5 silently; a correct bound
+    changes nothing."""
+    bad = edges.union(
+        spark.createDataFrame([(1, bad_id)], "src long, dst long")
+    )
+    with scoped_session_confs(spark, {"spark.sql.ansi.enabled": "false"}):
+        assert sorted(
+            gb.build_clean_edges(edges, max_id=5).collect()
+        ) == sorted(gb.build_clean_edges(edges).collect())
+        with pytest.raises(Exception, match="outside max_id bound"):
+            gb.build_clean_edges(bad, max_id=10).collect()
 
 
 def test_degrees(edges):

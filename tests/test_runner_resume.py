@@ -64,3 +64,18 @@ def test_cli_main_runs_and_prints_stats(spark, capsys):
     assert stats["scale"] == 7 and stats["completed_runs"] == 4
     assert stats["harmonic_mean_teps"] > 0
     assert stats["validation"] is True
+
+
+def test_batching_and_validation_mode_keep_edge_counts(spark):
+    """Strict validation over 2-root batches and the deferred batched
+    pass both go through the keyed validators: per-root TEPS edge
+    counts equal the one-root-at-a-time run."""
+
+    def counts(**kw):
+        res = run_benchmark(spark, scale=6, num_roots=4, **kw)
+        return {r["root"]: r["edge_count"] for r in res.runs}
+
+    want = counts(validation=True, root_batch=1)
+    assert len(want) == 4 and all(v > 0 for v in want.values())
+    assert counts(validation=True, root_batch=2) == want
+    assert counts(validation="batched", root_batch=1) == want
