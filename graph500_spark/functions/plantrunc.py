@@ -27,6 +27,11 @@ blocks are reclaimed by Spark's ContextCleaner when the driver drops
 the last reference (the loops rebind their variables every round, so
 this happens promptly).
 
+``truncate_plan_for`` is the one owner of the lazy-versus-eager
+choice for a leaf whose row count the driver knows: lazy while that
+count fits the engine's broadcast threshold (``functions/sizing.py``,
+read at call time), eager past it. The reason is stated once, there.
+
 ``cached`` is the one owner of a loop's stationary input cache (the
 edge table every superstep joins against): it persists the frame only
 when nothing caches that plan yet, and releases only what it
@@ -47,6 +52,8 @@ from contextlib import contextmanager
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+
+from graph500_spark.functions import sizing
 
 _warned_fallback = False
 
@@ -102,6 +109,25 @@ def truncate_plan_lazy(df: DataFrame) -> DataFrame:
         n = nxt.count()          # materializes + counts in one job
     """
     return truncate_plan(df, eager=False)
+
+
+def truncate_plan_for(df: DataFrame, n_rows: int) -> DataFrame:
+    """``truncate_plan_lazy`` while ``n_rows`` fits the broadcast
+    threshold (``sizing.fits``), else ``truncate_plan``; chainable as
+    ``df.transform(truncate_plan_for, n_rows)``.
+
+    Why the choice follows the broadcast decision: a leaf whose next
+    consumer is a broadcast join is materialized by that join's
+    blocking broadcast build before any other consumer reads it, so
+    the lazy form saves the standalone checkpoint job. Past the
+    threshold the consumer is a shuffle join, nothing blocks, and a
+    lazy leaf with two consumers can be computed twice by concurrent
+    stages: double work, and two different results for a leaf that is
+    not deterministic. The eager form is therefore the only correct
+    path for inputs above the threshold."""
+    if sizing.fits(n_rows):
+        return truncate_plan_lazy(df)
+    return truncate_plan(df)
 
 
 @contextmanager

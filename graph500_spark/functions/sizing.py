@@ -29,17 +29,44 @@ from ``count_fn`` when the operator has a persisted edge table whose
 materialization the count merely fronts (bfs's prepartitioned table,
 pregel's cached edges); when neither is available "auto" degrades to
 inherit-session rather than schedule a scan over unpersisted lineage.
+
+The broadcast-vs-shuffle choice is the second sizing rule, and this
+module is its one owner. Loop state is a checkpoint leaf with no
+Catalyst statistics, so the optimizer alone would shuffle the
+stationary edge table against it every round; the driver, however,
+knows each side's exact row count from the round's own readout. A
+side is broadcast while that count ``fits`` ``BROADCAST_ROWS`` and
+shuffle-joined past it: the Spark-first analog of the reference's
+frontier-size α/β switch (bfs.hpp:2799-2829, parameters.h:87-89),
+one engine-wide rule rather than an option per operator. ``fits``
+and ``broadcast_if_fits`` read ``BROADCAST_ROWS`` at call time, so a
+test forces the shuffle regime everywhere with
+``monkeypatch.setattr(sizing, "BROADCAST_ROWS", 0)``.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 ROWS_PER_PARTITION = 2_000_000
 AUTO_FLOOR = 32
 AUTO_CAP = 512
+BROADCAST_ROWS = 2_000_000
+
+
+def fits(n_rows: int) -> bool:
+    """True while a side of ``n_rows`` driver-known rows is broadcast
+    (module docstring)."""
+    return n_rows <= BROADCAST_ROWS
+
+
+def broadcast_if_fits(df: DataFrame, n_rows: int) -> DataFrame:
+    """``df`` with a broadcast hint when ``fits(n_rows)``, else as is."""
+    return F.broadcast(df) if fits(n_rows) else df
 
 
 def derived_partitions(n_rows: int) -> int:
@@ -90,17 +117,21 @@ def widen_narrow_input(df, *keys: str, probe=None):
     is returned untouched — repartitioning it down to core count would
     be the opposite of the point.
 
-    The width probe reads ``getNumPartitions()`` from ``probe``
-    (default: ``df`` itself); pass a cached/scan-rooted frame (the
-    persisted graph fixture, a checkpoint leaf) so the probe is
-    plan-compile only — no job. Keys must include the downstream join
-    key so a later shuffle join can reuse the exchange (§2.4)."""
-    from pyspark.sql import functions as F
-
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    The width probe reads ``getNumPartitions()`` from ``probe``, a
+    cached/scan-rooted frame (the persisted graph fixture, a
+    checkpoint leaf) whose probe is plan-compile only — no job. With
+    no ``probe``, ``df`` is probed only when it is cached; any other
+    ``df`` is returned untouched, because under AQE reading the width
+    of a plan with exchanges executes them. Keys must include the
+    downstream join key so a later shuffle join can reuse the
+    exchange (§2.4)."""
+    if probe is None:
+        if df.storageLevel == StorageLevel.NONE:
+            return df
+        probe = df
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
-        cur = (probe if probe is not None else df).rdd.getNumPartitions()
+        cur = probe.rdd.getNumPartitions()
     except Exception:  # pragma: no cover — exotic plans: skip widening
         return df
     if cur >= target:

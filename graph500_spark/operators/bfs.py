@@ -20,9 +20,10 @@ Scale notes:
   * The per-level join shuffles on src; pre-partitioning the edge table
     by src (``repartition("src")`` + persist, done in the level loop) makes
     every level reuse that exchange — only the (small) frontier moves.
-  * ``localCheckpoint`` every level cuts the lineage chain that
+  * each level's frontier is a lazy checkpoint leaf
+    (``truncate_plan_lazy``), which cuts the lineage chain that
     otherwise grows linearly with depth (the classic iterative-Spark
-    failure mode; SURVEY.md §7.3).
+    failure mode; SURVEY.md §7.3); the level's count materializes it.
   * The visited set stays distributed; the only driver-side value per
     level is the frontier count (the reference allreduces nq_size the
     same way, bfs.hpp:1163).
@@ -43,7 +44,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from graph500_spark.functions.plantrunc import truncate_plan_lazy
 from graph500_spark.functions.confscope import scoped_session_confs
-from graph500_spark.functions.sizing import resolve_shuffle_partitions
+from graph500_spark.functions.sizing import (
+    broadcast_if_fits,
+    fits,
+    resolve_shuffle_partitions,
+)
 
 PRED_SCHEMA = T.StructType(
     [
@@ -76,7 +81,6 @@ def _bfs_levels(
     max_depth: int | None,
     prepartition: bool,
     shuffle_partitions: int | str | None,
-    broadcast_rows: int,
     edge_count: int | None,
 ) -> DataFrame:
     """The level-synchronous loop behind ``bfs`` and ``bfs_multi``:
@@ -116,14 +120,13 @@ def _bfs_levels(
                 depth += 1
                 # One logical step: frontier ⋈ adjacency → candidate
                 # (dst, src), keep min(src) per dst, drop already-reached.
-                frontier_side = frontier.select(
-                    *key, F.col("vertex").alias("src")
+                frontier_side = broadcast_if_fits(
+                    frontier.select(*key, F.col("vertex").alias("src")),
+                    n_frontier,
                 )
-                if n_frontier <= broadcast_rows:
-                    frontier_side = F.broadcast(frontier_side)
-                reached_side = reached.select(*cols)
-                if n_reached <= broadcast_rows:
-                    reached_side = F.broadcast(reached_side)
+                reached_side = broadcast_if_fits(
+                    reached.select(*cols), n_reached
+                )
                 candidates = edges.join(frontier_side, "src").select(
                     *key, F.col("dst").alias("vertex"), *pred_col
                 )
@@ -136,7 +139,7 @@ def _bfs_levels(
                 #    (map-side) min-aggregation collapses duplicate dsts
                 #    before the shuffle, and the shuffled anti-join then
                 #    reuses the groupBy's hash partitioning on vertex.
-                if n_reached <= broadcast_rows:
+                if fits(n_reached):
                     candidates = dedup(
                         candidates.join(reached_side, cols, "left_anti")
                     )
@@ -173,7 +176,6 @@ def bfs(
     max_depth: int | None = None,
     prepartition: bool = True,
     shuffle_partitions: int | str | None = "auto",
-    broadcast_rows: int = 2_000_000,
     edge_count: int | None = None,
 ) -> DataFrame:
     """BFS from ``root`` over a symmetrized, deduped edge list.
@@ -198,8 +200,8 @@ def bfs(
     per-level shuffles widen; the layout was already built). ``None``
     opts out entirely: the session value and AQE coalescing govern.
 
-    Job structure: the new frontier is eagerly checkpointed each level
-    (one materialization job + one cheap count over the cached leaf);
+    Job structure: the new frontier is a lazy checkpoint leaf each
+    level, materialized by the level's own count (one job per level);
     ``reached`` is kept as a union of the already-checkpointed
     per-level frontiers, never re-materialized — re-checkpointing the
     union every level would recopy all reached rows, turning total
@@ -209,9 +211,10 @@ def bfs(
     Catalyst alone would plan every level as a shuffle join and move the
     (large, persisted) edge table each iteration. The driver, however,
     knows the exact frontier and reached counts from the previous
-    level's job, and injects ``broadcast()`` hints while they are under
-    ``broadcast_rows`` — the Spark-first analog of the reference's
-    direction-optimization heuristics (bfs.hpp:2799-2829): small
+    level's job, and injects ``broadcast()`` hints while they fit the
+    engine's one threshold (``functions/sizing.py``) — the Spark-first
+    analog of the reference's direction-optimization heuristics
+    (bfs.hpp:2799-2829): small
     frontier → map-side join against the stationary edge table; huge
     frontier (cluster scale) → fall back to shuffle join automatically.
     """
@@ -225,7 +228,6 @@ def bfs(
         max_depth=max_depth,
         prepartition=prepartition,
         shuffle_partitions=shuffle_partitions,
-        broadcast_rows=broadcast_rows,
         edge_count=edge_count,
     )
 
@@ -237,7 +239,6 @@ def bfs_multi(
     max_depth: int | None = None,
     prepartition: bool = True,
     shuffle_partitions: int | str | None = "auto",
-    broadcast_rows: int = 2_000_000,
     edge_count: int | None = None,
     with_pred: bool = True,
 ) -> DataFrame:
@@ -282,7 +283,6 @@ def bfs_multi(
         max_depth=max_depth,
         prepartition=prepartition,
         shuffle_partitions=shuffle_partitions,
-        broadcast_rows=broadcast_rows,
         edge_count=edge_count,
     )
 

@@ -36,9 +36,10 @@ from pyspark.sql import functions as F
 from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import (
     cached,
-    truncate_plan,
+    truncate_plan_for,
     truncate_plan_lazy,
 )
+from graph500_spark.functions.sizing import broadcast_if_fits, fits
 
 BC_SCALE = 1_000_000
 
@@ -49,7 +50,6 @@ def betweenness_sampled(
     roots: list[int],
     max_depth: int = 32,
     shuffle_partitions: int | None = None,
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """[vertex, bc_q] — betweenness contribution sums (micro-units)
     over the sampled roots, excluding each root's own row (Brandes
@@ -60,8 +60,8 @@ def betweenness_sampled(
     shuffle the STATIONARY edge cache — twice per level across the
     two passes. The driver knows every level's row count (the forward
     loop counts each level) and injects broadcast() while a side fits
-    under ``broadcast_rows``; past that the joins degrade to shuffle
-    joins (the bfs.py discipline).
+    the engine's threshold (``functions/sizing.py``); past that the
+    joins degrade to shuffle joins (the bfs.py discipline).
     """
     with scoped_session_confs(
         spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
@@ -82,9 +82,6 @@ def betweenness_sampled(
         level_counts = [len(roots)]
         n_seen = len(roots)
 
-        def bc(df, n):
-            return F.broadcast(df) if n <= broadcast_rows else df
-
         # In the broadcast regime the forward pass ALSO materializes
         # each level's TREE-PAIR table — the post-anti-join, pre-agg
         # fan-out rows (root, v at lvl, w newly reached, σ_v). That
@@ -95,7 +92,7 @@ def betweenness_sampled(
         # already-computed pairs (guide §2.4: don't recompute a join
         # whose output you already had). The pairs checkpoint is lazy
         # and chains under the level's count, so the forward pass
-        # still pays ONE driver barrier per level. Past broadcast_rows
+        # still pays ONE driver barrier per level. Past the threshold
         # the pairs are not kept (caching edge-scale rows per level is
         # the wrong trade at cluster scale) and the backward pass
         # falls back to the re-join form below.
@@ -103,7 +100,7 @@ def betweenness_sampled(
         while depth < max_depth:
             prev = levels[-1]
             joined = edges.join(
-                bc(
+                broadcast_if_fits(
                     prev.withColumnRenamed("vertex", "src"),
                     level_counts[-1],
                 ),
@@ -111,8 +108,8 @@ def betweenness_sampled(
             )
             in_regime = (
                 pairs_by_level is not None
-                and level_counts[-1] <= broadcast_rows
-                and n_seen <= broadcast_rows
+                and fits(level_counts[-1])
+                and fits(n_seen)
             )
             if in_regime:
                 pairs = (
@@ -123,7 +120,7 @@ def betweenness_sampled(
                         F.col("sigma").alias("sigma_v"),
                     )
                     .join(
-                        bc(
+                        broadcast_if_fits(
                             seen.select(
                                 "root", F.col("vertex").alias("w")
                             ),
@@ -154,7 +151,9 @@ def betweenness_sampled(
                         "root", F.col("dst").alias("vertex"), "sigma"
                     )
                     .join(
-                        bc(seen, n_seen), ["root", "vertex"], "left_anti"
+                        broadcast_if_fits(seen, n_seen),
+                        ["root", "vertex"],
+                        "left_anti",
                     )
                     .groupBy("root", "vertex")
                     .agg(F.sum("sigma").alias("sigma"))
@@ -184,17 +183,8 @@ def betweenness_sampled(
         # checkpoint leaf: no separate materialization job — the next
         # level's (blocking) broadcast build computes and caches it
         # before its second consumer (the final accumulation) runs, so
-        # the backward pass pays zero standalone driver barriers. Past
-        # broadcast_rows the eager form stays: a lazy leaf with two
-        # consumers and no blocking build risks double compute.
-        def tp_bk(df, n_rows):
-            return df.transform(
-                truncate_plan_lazy
-                if n_rows <= broadcast_rows
-                else truncate_plan
-            )
-
-        delta = tp_bk(
+        # the backward pass pays zero standalone driver barriers.
+        delta = truncate_plan_for(
             levels[-1].select(
                 "root", "vertex", F.lit(0).cast("long").alias("delta_q")
             ),
@@ -212,7 +202,7 @@ def betweenness_sampled(
                 F.col("vertex").alias("dst"),
                 F.col("sigma").alias("sigma_w"),
             ).join(
-                bc(
+                broadcast_if_fits(
                     delta.select(
                         "root",
                         F.col("vertex").alias("dst"),
@@ -234,7 +224,7 @@ def betweenness_sampled(
                 contrib = (
                     pairs_by_level[lvl]
                     .join(
-                        bc(
+                        broadcast_if_fits(
                             child.select(
                                 "root",
                                 F.col("dst").alias("w"),
@@ -259,7 +249,7 @@ def betweenness_sampled(
             else:
                 contrib = (
                     edges.join(
-                        bc(
+                        broadcast_if_fits(
                             cur.select(
                                 "root",
                                 F.col("vertex").alias("src"),
@@ -269,7 +259,9 @@ def betweenness_sampled(
                         ),
                         "src",
                     )
-                    .join(bc(child, n_child), ["root", "dst"])
+                    .join(
+                        broadcast_if_fits(child, n_child), ["root", "dst"]
+                    )
                     .select(
                         "root",
                         F.col("src").alias("vertex"),
@@ -281,7 +273,7 @@ def betweenness_sampled(
                     .groupBy("root", "vertex")
                     .agg(F.sum("term_q").cast("long").alias("delta_q"))
                 )
-            delta = tp_bk(
+            delta = truncate_plan_for(
                 cur.select("root", "vertex")
                 .join(contrib, ["root", "vertex"], "left")
                 .select(

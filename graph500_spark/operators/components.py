@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import cached, truncate_plan_lazy
+from graph500_spark.functions.sizing import broadcast_if_fits
 from graph500_spark.operators.pregel import propagate_extreme
 
 
@@ -40,7 +41,6 @@ def connected_components(
     edges_clean: DataFrame,
     max_rounds: int | None = None,
     shuffle_partitions: int | None = None,
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """[vertex, component] over a symmetrized, deduped edge list;
     component = min vertex id in the vertex's connected component.
@@ -59,7 +59,6 @@ def connected_components(
         F.least,
         n_supersteps=max_rounds,
         shuffle_partitions=shuffle_partitions,
-        broadcast_rows=broadcast_rows,
     ).select("vertex", F.col("label").alias("component"))
 
 
@@ -172,7 +171,6 @@ def strongly_connected_components(
     edges_directed: DataFrame,
     max_outer: int = 30,
     shuffle_partitions: int | None = None,
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """[vertex, scc_id] over a DIRECTED edge list; scc_id = min vertex
     id in the vertex's strongly connected component.
@@ -208,14 +206,9 @@ def strongly_connected_components(
         n_remaining = remaining.count()
         parts: list[DataFrame] = []
 
-        def bc(df):
-            return F.broadcast(df) if n_remaining <= broadcast_rows else df
-
         def fixpoint(e: DataFrame, labels: DataFrame, pick) -> DataFrame:
             return propagate_extreme(
-                spark, e, labels, pick,
-                shuffle_partitions=shuffle_partitions,
-                broadcast_rows=broadcast_rows,
+                spark, e, labels, pick, shuffle_partitions=shuffle_partitions
             )
 
         for _ in range(max_outer):
@@ -223,10 +216,16 @@ def strongly_connected_components(
                 break
             live = (
                 edges.join(
-                    bc(remaining.select(F.col("vertex").alias("src"))),
+                    broadcast_if_fits(
+                        remaining.select(F.col("vertex").alias("src")),
+                        n_remaining,
+                    ),
                     "src", "left_semi",
                 ).join(
-                    bc(remaining.select(F.col("vertex").alias("dst"))),
+                    broadcast_if_fits(
+                        remaining.select(F.col("vertex").alias("dst")),
+                        n_remaining,
+                    ),
                     "dst", "left_semi",
                 )
             )
@@ -238,20 +237,22 @@ def strongly_connected_components(
             # color-homogeneous REVERSED edges; propagate pivot reach
             ce = (
                 live.join(
-                    bc(
+                    broadcast_if_fits(
                         colors.select(
                             F.col("vertex").alias("src"),
                             F.col("color").alias("cs"),
-                        )
+                        ),
+                        n_remaining,
                     ),
                     "src",
                 )
                 .join(
-                    bc(
+                    broadcast_if_fits(
                         colors.select(
                             F.col("vertex").alias("dst"),
                             F.col("color").alias("cd"),
-                        )
+                        ),
+                        n_remaining,
                     ),
                     "dst",
                 )
@@ -270,14 +271,16 @@ def strongly_connected_components(
             )
             members = (
                 marked.filter("label")
-                .join(bc(colors), "vertex")
+                .join(broadcast_if_fits(colors, n_remaining), "vertex")
                 .select("vertex", F.col("color").alias("scc_id"))
                 .transform(truncate_plan_lazy)
             )
             parts.append(members)
             # lazy: remaining.count() materializes both leaves in one job
             remaining = remaining.join(
-                bc(members.select("vertex")), "vertex", "left_anti"
+                broadcast_if_fits(members.select("vertex"), n_remaining),
+                "vertex",
+                "left_anti",
             ).transform(truncate_plan_lazy)
             n_remaining = remaining.count()
         if n_remaining != 0:

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graph500_spark.functions.sizing import broadcast_if_fits
+
 
 def remove_self_loops(edges: DataFrame) -> DataFrame:
     """P1: drop (v,v) edges. Predicate pushes down to the scan."""
@@ -294,7 +296,6 @@ def ego_subgraph(
     edges_clean,
     root: int,
     k: int,
-    broadcast_rows: int = 2_000_000,
     **bfs_kwargs,
 ):
     """Induced k-hop ego subgraph: the edges whose BOTH endpoints lie
@@ -303,10 +304,9 @@ def ego_subgraph(
     a vertex). One bounded BFS + two semi-joins on the reached set;
     like the BFS loop itself, the driver knows the reached count (the
     BFS result is a union of counted checkpointed frontiers) and
-    injects the broadcast hint only while it fits — huge
+    injects the broadcast hint only while it fits the threshold the
+    BFS levels use too (``functions/sizing.py``) — huge
     neighborhoods degrade to shuffle semi-joins."""
-    from pyspark.sql import functions as F
-
     from graph500_spark.operators.bfs import bfs
 
     # the session width governs unless the caller scopes one
@@ -314,8 +314,7 @@ def ego_subgraph(
     reached = bfs(
         spark, edges_clean, root, max_depth=k, **bfs_kwargs
     ).select("vertex")
-    if reached.count() <= broadcast_rows:
-        reached = F.broadcast(reached)
+    reached = broadcast_if_fits(reached, reached.count())
     return (
         edges_clean.select("src", "dst")
         .join(reached.withColumnRenamed("vertex", "src"), "src", "left_semi")

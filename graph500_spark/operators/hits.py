@@ -43,16 +43,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from graph500_spark.functions.plantrunc import (
     cached,
-    truncate_plan,
+    truncate_plan_for,
     truncate_plan_lazy,
 )
+from graph500_spark.functions.sizing import broadcast_if_fits
 
 
 def hits(
     spark: SparkSession,
     edges_directed: DataFrame,
     n_iterations: int = 5,
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """[vertex, hub, auth] after `n_iterations` rounds from the
     uniform authority vector over a directed [src, dst] edge list."""
@@ -71,24 +71,22 @@ def hits(
         shift = max(0, round(math.log2(max(m / n, 1.0))))
         iter_scale = math.ldexp(1.0, -2 * shift)
 
-        # lazy when the score vector broadcasts (the blocking broadcast
-        # build materializes it); eager past broadcast_rows — a lazy leaf
-        # with two consumers and no blocking build risks double compute.
-        tp = truncate_plan_lazy if n <= broadcast_rows else truncate_plan
+        # the score vector's blocking broadcast build materializes it
         auth = verts.select(
             "vertex", (F.lit(1.0) / F.lit(float(n))).alias("score")
-        ).transform(tp)
+        ).transform(truncate_plan_for, n)
 
         def half_step(
             scores: DataFrame, out_edges: bool, scale: float = 1.0
         ) -> DataFrame:
             """sum scores over (out_edges ? dst : src) neighbors (raw,
             unnormalized, LAZY — caller decides where to checkpoint)."""
-            s = scores.withColumnRenamed(
-                "vertex", "dst" if out_edges else "src"
+            s = broadcast_if_fits(
+                scores.withColumnRenamed(
+                    "vertex", "dst" if out_edges else "src"
+                ),
+                n,
             )
-            if n <= broadcast_rows:
-                s = F.broadcast(s)
             raw = (
                 edges.join(s, "dst" if out_edges else "src")
                 .groupBy(
@@ -115,11 +113,11 @@ def hits(
             # cache is dropped on return).
             hub = half_step(auth, out_edges=True)
             if last:
-                hub = hub.transform(tp)
+                hub = hub.transform(truncate_plan_for, n)
             prev_auth = auth
             auth = half_step(
                 hub, out_edges=False, scale=iter_scale
-            ).transform(tp)
+            ).transform(truncate_plan_for, n)
             # Safe to drop: mid-loop the lazy hub tree referencing it is
             # superseded next iteration; on the last iteration hub was
             # checkpointed above, truncating its lineage.

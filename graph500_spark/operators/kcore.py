@@ -30,13 +30,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from graph500_spark.functions.plantrunc import cached, truncate_plan_lazy
+from graph500_spark.functions.sizing import broadcast_if_fits
 
 
 def k_core(
     edges_clean: DataFrame,
     k: int,
     max_rounds: int = 16,
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """[vertex, degree]: vertices of the k-core with their within-core
     degree. Empty result if the graph has no k-core."""
@@ -62,8 +62,7 @@ def k_core(
         n_survivors = row["ns"] or 0
         if n_survivors == n_vertices:
             break  # fixpoint: nobody peeled this round
-        if n_survivors <= broadcast_rows:
-            survivors = F.broadcast(survivors)
+        survivors = broadcast_if_fits(survivors, n_survivors)
         new_edges = (
             edges.join(
                 survivors.select(F.col("vertex").alias("src")), "src", "left_semi"
@@ -87,7 +86,6 @@ def k_core(
 def core_numbers(
     edges_clean: DataFrame,
     max_iters: int = 64,
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """[vertex, coreness] — the full core decomposition (the max k
     such that v survives k-core peeling), via the distributed h-index
@@ -128,11 +126,12 @@ def core_numbers(
         # broadcast() while it fits, exactly the bfs.py discipline.
         n_vertices = c.count()
         for _ in range(max_iters):
-            c_side = c.select(
-                F.col("vertex").alias("dst"), F.col("c").alias("c_nbr")
+            c_side = broadcast_if_fits(
+                c.select(
+                    F.col("vertex").alias("dst"), F.col("c").alias("c_nbr")
+                ),
+                n_vertices,
             )
-            if n_vertices <= broadcast_rows:
-                c_side = F.broadcast(c_side)
             nbr = edges.join(c_side, "dst").select(
                 F.col("src").alias("vertex"), "c_nbr"
             )

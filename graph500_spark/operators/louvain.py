@@ -75,11 +75,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from graph500_spark.functions.confscope import scoped_session_confs
-from graph500_spark.functions.plantrunc import (
-    cached,
-    truncate_plan,
-    truncate_plan_lazy,
-)
+from graph500_spark.functions.plantrunc import cached, truncate_plan_lazy
+from graph500_spark.functions.sizing import broadcast_if_fits
 
 
 def louvain_communities(
@@ -87,7 +84,6 @@ def louvain_communities(
     edges_clean: DataFrame,
     max_iters: int = 16,
     shuffle_partitions: int | None = None,
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """[vertex, community] — one-level Louvain local-moving loop
     over a symmetric edge list; returns the highest-modularity
@@ -129,10 +125,6 @@ def louvain_communities(
         # (bfs.py discipline; at cluster scale the guard falls back to
         # shuffle joins). Every broadcast side below is <= |V| rows.
         n_vertices = comm.count()
-        small = n_vertices <= broadcast_rows
-
-        def bc(df):
-            return F.broadcast(df) if small else df
 
         best_comm, best_qnum = comm, None
         quiet_rounds = 0
@@ -147,11 +139,12 @@ def louvain_communities(
             kvc = (
                 edges.filter(F.col("src") != F.col("dst"))
                 .join(
-                    bc(
+                    broadcast_if_fits(
                         comm.select(
                             F.col("vertex").alias("dst"),
                             F.col("community").alias("cd"),
-                        )
+                        ),
+                        n_vertices,
                     ),
                     "dst",
                 )
@@ -159,24 +152,26 @@ def louvain_communities(
                 .agg(F.sum("w").cast("long").alias("k"))
             )
             cur = comm.join(
-                bc(
+                broadcast_if_fits(
                     csum.select(
                         F.col("community").alias("ca"),
                         F.col("d_c").alias("d_ca"),
-                    )
+                    ),
+                    n_vertices,
                 ),
                 F.col("community") == F.col("ca"),
             ).select(
                 "vertex", F.col("community").alias("ca"), "deg", "d_ca"
             )
             ann = (
-                kvc.join(bc(cur), "vertex")
+                kvc.join(broadcast_if_fits(cur, n_vertices), "vertex")
                 .join(
-                    bc(
+                    broadcast_if_fits(
                         csum.select(
                             F.col("community").alias("cd"),
                             F.col("d_c").alias("d_cd"),
-                        )
+                        ),
+                        n_vertices,
                     ),
                     "cd",
                 )
@@ -206,7 +201,7 @@ def louvain_communities(
             )
             moved = (
                 comm.join(
-                    bc(per_v).select(
+                    broadcast_if_fits(per_v, n_vertices).select(
                         "vertex",
                         F.when(
                             F.col("b").isNotNull()
@@ -276,13 +271,19 @@ def louvain_communities(
         )
         f_row = (
             edges.join(
-                bc(comm.select(F.col("vertex").alias("src"),
-                               F.col("community").alias("c_s"))),
+                broadcast_if_fits(
+                    comm.select(F.col("vertex").alias("src"),
+                                F.col("community").alias("c_s")),
+                    n_vertices,
+                ),
                 "src",
             )
             .join(
-                bc(comm.select(F.col("vertex").alias("dst"),
-                               F.col("community").alias("c_d"))),
+                broadcast_if_fits(
+                    comm.select(F.col("vertex").alias("dst"),
+                                F.col("community").alias("c_d")),
+                    n_vertices,
+                ),
                 "dst",
             )
             .agg(

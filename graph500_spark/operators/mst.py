@@ -39,8 +39,10 @@ from graph500_spark.operators.components import connected_components
 from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import (
     truncate_plan,
+    truncate_plan_for,
     truncate_plan_lazy,
 )
+from graph500_spark.functions.sizing import broadcast_if_fits
 
 
 def minimum_spanning_forest(
@@ -48,7 +50,6 @@ def minimum_spanning_forest(
     edges_weighted: DataFrame,
     max_rounds: int = 64,
     shuffle_partitions: int | None = None,
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """[src, dst, weight] — the minimum spanning forest of an
     undirected weighted graph given as single-orientation edges
@@ -81,12 +82,8 @@ def minimum_spanning_forest(
         # the driver injects broadcast() on the label sides while the
         # vertex table fits — otherwise both labeling joins shuffle the
         # (weighted) edge table every Boruvka round (bfs.py discipline;
-        # falls back to shuffle joins past broadcast_rows).
+        # falls back to shuffle joins past the threshold).
         n_vertices = comp.count()
-        small = n_vertices <= broadcast_rows
-
-        def bc(df):
-            return F.broadcast(df) if small else df
 
         for _round in range(max_rounds):
             lab = comp.withColumnRenamed("vertex", "lo").withColumnRenamed(
@@ -96,8 +93,8 @@ def minimum_spanning_forest(
                 "comp", "c_hi"
             )
             e = (
-                edges.join(bc(lab), "lo")
-                .join(bc(labh), "hi")
+                edges.join(broadcast_if_fits(lab, n_vertices), "lo")
+                .join(broadcast_if_fits(labh, n_vertices), "hi")
                 .filter(F.col("c_lo") != F.col("c_hi"))
             )
             # candidates from both endpoints; min under the strict total
@@ -178,15 +175,16 @@ def minimum_spanning_forest(
                 )
             comp = (
                 comp.join(
-                    bc(merge_map), comp.comp == merge_map.old_comp, "left"
+                    broadcast_if_fits(merge_map, n_vertices),
+                    comp.comp == merge_map.old_comp,
+                    "left",
                 )
                 .select(
                     "vertex",
                     F.coalesce("new_comp", "comp").alias("comp"),
                 )
-                # lazy in the broadcast regime (next round's blocking
-                # label-broadcast build materializes it); eager otherwise
-                .transform(truncate_plan_lazy if small else truncate_plan)
+                # next round's blocking label broadcast materializes it
+                .transform(truncate_plan_for, n_vertices)
             )
 
 

@@ -32,11 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from graph500_spark.functions.confscope import scoped_session_confs
-from graph500_spark.functions.plantrunc import (
-    cached,
-    truncate_plan,
-    truncate_plan_lazy,
-)
+from graph500_spark.functions.plantrunc import cached, truncate_plan_for
+from graph500_spark.functions.sizing import broadcast_if_fits
 
 
 def pagerank(
@@ -45,7 +42,6 @@ def pagerank(
     n_iterations: int = 10,
     damping: float = 0.85,
     shuffle_partitions: int | None = None,
-    broadcast_rows: int = 2_000_000,
     sources: list[int] | None = None,
 ) -> DataFrame:
     """[vertex, norm_rank] over a symmetrized, deduped edge list after
@@ -89,30 +85,23 @@ def pagerank(
             teleport_col = F.when(
                 in_s, F.lit((1.0 - damping) / len(sources))
             ).otherwise(F.lit(0.0))
-        # When the rank vector broadcasts, the (blocking) broadcast
-        # build materializes a LAZY checkpoint before any other
-        # consumer touches it — the standalone materialization job
-        # disappears (guide §1.2/§5). Past broadcast_rows the eager
-        # form stays: a lazy leaf with two consumers and no blocking
-        # build could be computed twice by concurrent stages.
-        tp = (
-            truncate_plan_lazy
-            if n_vertices <= broadcast_rows
-            else truncate_plan
+        # the rank vector's blocking broadcast build materializes it
+        ranks = deg.select("vertex", init.alias("rank")).transform(
+            truncate_plan_for, n_vertices
         )
-        ranks = deg.select("vertex", init.alias("rank")).transform(tp)
         for it in range(n_iterations):
             # Checkpointed rank state carries no Catalyst stats, so
             # without the driver-known-count hint every iteration
             # would shuffle the (large, stationary) edge table; with
             # it the rank vector ships map-side and the edges never
             # move (same strategy as operators/bfs.py).
-            rank_side = ranks.join(deg, "vertex").select(
-                F.col("vertex").alias("src"),
-                (F.col("rank") / F.col("outdeg")).alias("contrib"),
+            rank_side = broadcast_if_fits(
+                ranks.join(deg, "vertex").select(
+                    F.col("vertex").alias("src"),
+                    (F.col("rank") / F.col("outdeg")).alias("contrib"),
+                ),
+                n_vertices,
             )
-            if n_vertices <= broadcast_rows:
-                rank_side = F.broadcast(rank_side)
             contribs = (
                 edges.join(rank_side, "src")
                 .groupBy(F.col("dst").alias("vertex"))
@@ -131,7 +120,9 @@ def pagerank(
             # plan depth stays O(1) (≤2 rounds deep) regardless of
             # n_iterations (same lineage discipline as operators/bfs.py).
             if it % 2 == 1 or it == n_iterations - 1:
-                new_ranks = new_ranks.transform(tp)
+                new_ranks = new_ranks.transform(
+                    truncate_plan_for, n_vertices
+                )
             ranks = new_ranks
 
         out = ranks.select(

@@ -11,8 +11,9 @@ the scale disciplines live here once:
      of superstep count, materialized by the superstep's own readout
      (one driver barrier per superstep);
   2. driver-known counts drive explicit broadcast hints on the
-     sending side (loop state carries no Catalyst stats, so AQE alone
-     would shuffle the full edge table every round);
+     sending side, under the engine's one threshold
+     (``functions/sizing.py``; loop state carries no Catalyst stats,
+     so AQE alone would shuffle the full edge table every round);
   3. superseded round state is dropped by rebinding, so the
      ContextCleaner reclaims its blocks and cached state stays O(1);
   4. the stationary edge table is held by ``cached`` (one owner: a
@@ -64,7 +65,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import cached, truncate_plan_lazy
-from graph500_spark.functions.sizing import resolve_shuffle_partitions
+from graph500_spark.functions.sizing import (
+    broadcast_if_fits,
+    resolve_shuffle_partitions,
+)
 
 
 def pregel(
@@ -76,7 +80,6 @@ def pregel(
     apply_fn: Callable[[DataFrame, DataFrame], DataFrame],
     n_supersteps: int | None = 10,
     active_only: bool = False,
-    broadcast_rows: int = 2_000_000,
     shuffle_partitions: int | str | None = "auto",
     edge_count: int | None = None,
 ) -> DataFrame:
@@ -100,9 +103,9 @@ def pregel(
             step = 0
             while n_supersteps is None or step < n_supersteps:
                 step += 1
-                src_state = active.withColumnRenamed("vertex", "src")
-                if n_active <= broadcast_rows:
-                    src_state = F.broadcast(src_state)
+                src_state = broadcast_if_fits(
+                    active.withColumnRenamed("vertex", "src"), n_active
+                )
                 inbox = (
                     send(edges.join(src_state, "src"))
                     .groupBy("vertex")
@@ -135,7 +138,6 @@ def propagate_extreme(
     pick: Callable[..., Column],
     n_supersteps: int | None = None,
     shuffle_partitions: int | None = None,
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """[vertex, label] after ``n_supersteps`` (None = at the fixpoint)
     of label(v) ← pick(label(v), labels of v's in-neighbours), from
@@ -164,7 +166,6 @@ def propagate_extreme(
         apply_fn,
         n_supersteps=n_supersteps,
         active_only=True,
-        broadcast_rows=broadcast_rows,
         shuffle_partitions=shuffle_partitions,
     )
 

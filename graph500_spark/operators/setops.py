@@ -10,9 +10,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from graph500_spark.functions.plantrunc import (
     cached,
-    truncate_plan,
+    truncate_plan_for,
     truncate_plan_lazy,
 )
+from graph500_spark.functions.sizing import broadcast_if_fits
 
 
 def set_difference(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -52,7 +53,6 @@ def _mis_priority_expr(v: str) -> str:
 def maximal_independent_set(
     edges_clean: DataFrame,
     max_rounds: int = 40,
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """[vertex] — a maximal independent set of the symmetric clean
     graph: no two selected vertices are adjacent, and every
@@ -87,11 +87,7 @@ def maximal_independent_set(
         for _ in range(max_rounds):
             if n_remaining == 0:
                 break
-            rem = (
-                F.broadcast(remaining)
-                if n_remaining <= broadcast_rows
-                else remaining
-            )
+            rem = broadcast_if_fits(remaining, n_remaining)
             live_edges = (
                 edges.join(
                     rem.select(F.col("vertex").alias("src")), "src",
@@ -118,23 +114,12 @@ def maximal_independent_set(
                     | (F.col("p") < F.col("min_nb_p"))
                 )
                 .select("vertex")
-                # lazy in the broadcast regime: the (blocking) winners
-                # broadcast build materializes it before its other
-                # consumers run — no standalone checkpoint job. Past
-                # broadcast_rows keep eager (multiple consumers, no
-                # blocking build ⇒ double-compute risk).
-                .transform(
-                    truncate_plan_lazy
-                    if n_remaining <= broadcast_rows
-                    else truncate_plan
-                )
+                # the winners' blocking broadcast build materializes it
+                # before its other consumers run
+                .transform(truncate_plan_for, n_remaining)
             )
             mis_parts.append(winners)
-            win = (
-                F.broadcast(winners)
-                if n_remaining <= broadcast_rows
-                else winners
-            )
+            win = broadcast_if_fits(winners, n_remaining)
             dropped = winners.unionAll(
                 edges.join(
                     win.withColumnRenamed("vertex", "src"), "src",

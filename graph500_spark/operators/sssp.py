@@ -40,7 +40,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.functions.plantrunc import truncate_plan_lazy
-from graph500_spark.functions.sizing import resolve_shuffle_partitions
+from graph500_spark.functions.sizing import (
+    broadcast_if_fits,
+    resolve_shuffle_partitions,
+)
 from graph500_spark.operators.validate import violation_summary
 
 DIST_SCHEMA = T.StructType(
@@ -60,7 +63,6 @@ def _sssp_rounds(
     key: list[str],
     max_rounds: int | None,
     shuffle_partitions: int | str | None,
-    broadcast_rows: int,
     edge_count: int | None,
 ) -> DataFrame:
     """The delta-frontier relaxation loop behind ``sssp`` and
@@ -89,13 +91,14 @@ def _sssp_rounds(
         try:
             while max_rounds is None or rounds < max_rounds:
                 rounds += 1
-                f_side = frontier.select(
-                    *key,
-                    F.col("vertex").alias("src"),
-                    F.col("dist").alias("f_dist"),
+                f_side = broadcast_if_fits(
+                    frontier.select(
+                        *key,
+                        F.col("vertex").alias("src"),
+                        F.col("dist").alias("f_dist"),
+                    ),
+                    n_frontier,
                 )
-                if n_frontier <= broadcast_rows:
-                    f_side = F.broadcast(f_side)
                 proposals = edges.join(f_side, "src").select(
                     *key,
                     F.col("dst").alias("vertex"),
@@ -169,7 +172,6 @@ def sssp(
     root: int,
     max_rounds: int | None = None,
     shuffle_partitions: int | str | None = "auto",
-    broadcast_rows: int = 2_000_000,
     edge_count: int | None = None,
 ) -> DataFrame:
     """Shortest-path tree from ``root``: [vertex, dist, pred] for every
@@ -185,7 +187,6 @@ def sssp(
         key=[],
         max_rounds=max_rounds,
         shuffle_partitions=shuffle_partitions,
-        broadcast_rows=broadcast_rows,
         edge_count=edge_count,
     )
 
@@ -196,7 +197,6 @@ def sssp_multi(
     roots: list[int],
     max_rounds: int | None = None,
     shuffle_partitions: int | str | None = "auto",
-    broadcast_rows: int = 2_000_000,
     edge_count: int | None = None,
 ) -> DataFrame:
     """[source, vertex, dist, pred] — k shortest-path trees through
@@ -221,7 +221,6 @@ def sssp_multi(
         key=["source"],
         max_rounds=max_rounds,
         shuffle_partitions=shuffle_partitions,
-        broadcast_rows=broadcast_rows,
         edge_count=edge_count,
     )
 

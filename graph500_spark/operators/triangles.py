@@ -31,7 +31,10 @@ from graph500_spark.functions.plantrunc import (
     truncate_plan,
     truncate_plan_lazy,
 )
-from graph500_spark.functions.sizing import widen_narrow_input
+from graph500_spark.functions.sizing import (
+    broadcast_if_fits,
+    widen_narrow_input,
+)
 
 
 def orient_edges(edges_clean: DataFrame) -> DataFrame:
@@ -433,7 +436,9 @@ def k_truss(
     half_or = _orient_half(half).transform(truncate_plan)
     # the one-shot O(|E|^{3/2}) support pass gets full-machine width
     # (guide §2.5); the loop state keeps the input layout
-    sup = _edge_support_oriented(widen_narrow_input(half_or, "lo"))
+    sup = _edge_support_oriented(
+        widen_narrow_input(half_or, "lo", probe=half_or)
+    )
     # LEFT join + coalesce(0): triangle-free edges must enter the peel
     # with support 0 (k=2 ⇒ the 2-truss is the whole graph; an inner
     # join would silently drop them — only coincidentally harmless for
@@ -448,7 +453,6 @@ def k_truss(
         # state in the SAME job — one driver barrier per round
         .transform(truncate_plan_lazy)
     )
-    broadcast_rows = 2_000_000
     for _ in range(max_rounds):
         removed = cur.filter(F.col("support") < k - 2)
         # one scalar job drives the fixpoint test, the broadcast
@@ -465,11 +469,8 @@ def k_truss(
         # the removed side is driver-known-small after round 1
         # (peeled edges shrink monotonically) — broadcast it while it
         # fits instead of shuffling the adjacency both ways
-        removed_side = removed.select("lo", "hi")
-        if n_removed <= broadcast_rows:
-            removed_side = F.broadcast(removed_side)
         rz = (
-            removed_side
+            broadcast_if_fits(removed.select("lo", "hi"), n_removed)
             .join(
                 adj.select(F.col("a").alias("lo"), F.col("b").alias("z")),
                 "lo",
@@ -845,7 +846,9 @@ def truss_numbers(
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
     )
     half_or = _orient_half(half).transform(truncate_plan)
-    sup = _edge_support_oriented(widen_narrow_input(half_or, "lo"))
+    sup = _edge_support_oriented(
+        widen_narrow_input(half_or, "lo", probe=half_or)
+    )
     cur = (
         half_or.join(sup, ["u", "v"], "left")
         .select(

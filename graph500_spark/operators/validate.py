@@ -27,14 +27,18 @@ to. The batched forms (``validate_bfs_multi``,
 ``edge_visit_count`` on each root's slice by construction.
 
 ``violation_summary`` is the one [check, violations] reducer (also
-used by ``sssp.validate_sssp``): ``groupBy(*key).agg(count)`` per
-check, joined by a union. For key ``[]`` that is one global count per
-check; for key ``["root"]`` a roots × checks grid is left-joined on so
-that a clean root reports 0. The single-root summary keeps this form
-on measurement: a union of labelled rows → ``groupBy("check")`` → left
-join against the check list cut ``validate_bfs`` + its count from 10
-to 7 jobs but raised the median from 1.83 s to 2.38 s (local[4], kron
-s14, seeds (2, 3), 3 roots × 4 reps, order alternating).
+used by ``sssp.validate_sssp``). For key ``[]`` it is one global
+count per check, joined by a union. For key ``["root"]`` the
+labelled ``(root, check)`` violation rows of all checks are unioned
+and grouped ONCE on ``(root, check)``, and a roots × checks grid is
+left-joined on so that a clean root reports 0: one exchange for the
+grouping instead of one per check (``validate_bfs_multi`` on kron s7
+with 3 roots, 15 → 11 Spark jobs). The single-root summary keeps its
+per-check form on measurement: the union → ``groupBy("check")`` →
+left join against the check list cut ``validate_bfs`` + its count
+from 10 to 7 jobs but raised the median from 1.83 s to 2.38 s
+(local[4], kron s14, seeds (2, 3), 3 roots × 4 reps, order
+alternating).
 
 Scale notes: every check is 1-2 equi-joins + a filter — shuffle joins
 on vertex id that AQE can re-plan; pred_df is usually far smaller than
@@ -200,25 +204,32 @@ def violation_summary(
 ) -> DataFrame:
     """[check, violations] per named violation-row frame; with a
     ``keys`` frame, [*keys.columns, check, violations] for every
-    ``keys`` row, grouping each check on those columns (a key with no
-    violation rows reports 0)."""
-    key = [] if keys is None else keys.columns
-    out = None
-    for name, df in checks.items():
-        one = (
-            df.groupBy(*key)
-            .agg(F.count(F.lit(1)).alias("violations"))
-            .select(*key, F.lit(name).alias("check"), "violations")
-        )
-        out = one if out is None else out.unionByName(one)
-    if not key:
+    ``keys`` row (a key with no violation rows reports 0). Keyed, the
+    labelled violation rows of all checks are unioned and grouped
+    once on (*keys, check); unkeyed, each check is one global count
+    (module docstring)."""
+    if keys is None:
+        out = None
+        for name, df in checks.items():
+            one = df.groupBy().agg(
+                F.count(F.lit(1)).alias("violations")
+            ).select(F.lit(name).alias("check"), "violations")
+            out = one if out is None else out.unionByName(one)
         return out
+    key = keys.columns
+    rows = None
+    for name, df in checks.items():
+        one = df.select(*key, F.lit(name).alias("check"))
+        rows = one if rows is None else rows.unionByName(one)
+    counts = rows.groupBy(*key, "check").agg(
+        F.count(F.lit(1)).alias("violations")
+    )
     names = keys.sparkSession.createDataFrame(
         [(n,) for n in checks], "check string"
     )
     return (
         keys.crossJoin(F.broadcast(names))
-        .join(out, [*key, "check"], "left")
+        .join(counts, [*key, "check"], "left")
         .select(
             *key,
             "check",

@@ -29,8 +29,10 @@ from pyspark.sql import functions as F
 from graph500_spark.functions.plantrunc import (
     cached,
     truncate_plan,
+    truncate_plan_for,
     truncate_plan_lazy,
 )
+from graph500_spark.functions.sizing import broadcast_if_fits
 
 WALK_HASH_MOD = 1000000007
 _PACK_SHIFT = 1 << 24  # neighbor ids < 2^24 in all test graphs
@@ -48,7 +50,6 @@ def random_walks(
     spark: SparkSession,
     edges_clean: DataFrame,
     walk_len: int = 4,
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """[walk_id, step, vertex]: one walk per vertex (walk_id = start
     vertex), steps 0..walk_len inclusive. On a symmetrized graph no
@@ -65,11 +66,9 @@ def random_walks(
         out = frontier.select("walk_id", F.lit(0).alias("step"), "vertex")
 
         for step in range(1, walk_len + 1):
-            f_side = frontier.select(
-                F.col("vertex").alias("src"), "walk_id"
+            f_side = broadcast_if_fits(
+                frontier.select(F.col("vertex").alias("src"), "walk_id"), n
             )
-            if n <= broadcast_rows:
-                f_side = F.broadcast(f_side)
             packed = (
                 edges.join(f_side, "src")
                 .groupBy("walk_id")
@@ -81,15 +80,12 @@ def random_walks(
                     ).alias("pick")
                 )
             )
-            # lazy when the frontier broadcasts (the blocking build
-            # materializes it before the out-union's second reference);
-            # eager otherwise — two consumers, no blocking barrier.
+            # the frontier's blocking broadcast build materializes it
+            # before the out-union's second reference
             frontier = packed.select(
                 "walk_id",
                 (F.col("pick") % F.lit(_PACK_SHIFT)).alias("vertex"),
-            ).transform(
-                truncate_plan_lazy if n <= broadcast_rows else truncate_plan
-            )
+            ).transform(truncate_plan_for, n)
             out = out.unionByName(
                 frontier.select(
                     "walk_id", F.lit(step).alias("step"), "vertex"
@@ -205,7 +201,6 @@ def node2vec_walks(
     walk_len: int = 4,
     p_mult: int = 4,
     q_mult: int = 2,
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """[walk_id, step, vertex] — second-order (node2vec-style) biased
     walks: each step scores candidate dst by hash and MULTIPLIES the
@@ -250,11 +245,10 @@ def node2vec_walks(
             F.lit(1).alias("is_adj"),
         )
         for step in range(1, walk_len + 1):
-            f_side = frontier.select(
-                F.col("cur").alias("src"), "walk_id", "prev"
+            f_side = broadcast_if_fits(
+                frontier.select(F.col("cur").alias("src"), "walk_id", "prev"),
+                n,
             )
-            if n <= broadcast_rows:
-                f_side = F.broadcast(f_side)
             cand = edges.join(f_side, "src").join(
                 adj_probe, ["prev", "dst"], "left"
             )

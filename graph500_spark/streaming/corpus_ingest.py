@@ -30,6 +30,7 @@ from pyspark.sql.streaming import StreamingQuery
 from graph500_spark.operators import corpus as corpus_mod
 from graph500_spark.operators import text as tx
 from graph500_spark.functions.plantrunc import truncate_plan_lazy
+from graph500_spark.functions.sizing import fits
 
 DOC_SCHEMA = T.StructType(
     [
@@ -61,7 +62,6 @@ def _clean_batch(
     accepted: DataFrame | None,
     min_quality: float,
     n_accepted: int | None = None,
-    broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     # NOTE (measured, then reverted): a width guard here — repartition a
     # narrow batch up to defaultParallelism before the per-row
@@ -95,7 +95,7 @@ def _clean_batch(
     # anti-join degrades to the bucketed shuffle join as documented)
     if accepted is not None:
         acc = accepted.select("text_hash")
-        if n_accepted is not None and n_accepted <= broadcast_rows:
+        if n_accepted is not None and fits(n_accepted):
             acc = F.broadcast(acc)
         survivors = survivors.join(acc, "text_hash", "left_anti")
     # annotate + gate in ONE projection (language_id and text_quality

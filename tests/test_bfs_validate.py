@@ -9,6 +9,7 @@ from collections import defaultdict
 import pytest
 from pyspark.sql import functions as F
 
+from graph500_spark.functions import sizing
 from graph500_spark.operators import bfs as bfs_mod
 from graph500_spark.operators import graph_build as gb
 from graph500_spark.operators import validate as V
@@ -201,7 +202,7 @@ class TestBfsMulti:
             assert mine == ref, f"bfs_multi root {root} != reference"
         g.unpersist()
 
-    def test_pred_free_same_level_sets(self, spark):
+    def test_pred_free_same_level_sets(self, spark, monkeypatch):
         """with_pred=False (the depth-only fast path closeness /
         eccentricity / avg-path ride) must produce exactly the same
         (root, vertex, depth) multiset as the pred-carrying form, and
@@ -235,6 +236,7 @@ class TestBfsMulti:
         )
         assert got == want
         # both broadcast-threshold branches: force the shuffle branch
+        monkeypatch.setattr(sizing, "BROADCAST_ROWS", 0)
         lean_shuffle = bfs_multi(
             spark,
             g,
@@ -242,7 +244,6 @@ class TestBfsMulti:
             prepartition=False,
             shuffle_partitions=8,
             with_pred=False,
-            broadcast_rows=0,
         )
         got2 = sorted(
             (r["root"], r["vertex"], r["depth"])

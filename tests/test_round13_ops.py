@@ -159,13 +159,16 @@ def test_widen_narrow_input(spark):
     from graph500_spark.functions.sizing import widen_narrow_input
 
     dp = spark.sparkContext.defaultParallelism
+    # with no probe only a cached frame is probed (test_sizing.py)
     narrow = spark.createDataFrame(
         [(i % 7, i) for i in range(100)], "src long, dst long"
-    ).coalesce(1)
+    ).coalesce(1).persist()
     widened = widen_narrow_input(narrow, "src")
     assert widened.rdd.getNumPartitions() == dp
     assert sorted(map(tuple, widened.collect())) == sorted(
         map(tuple, narrow.collect())
     )
-    wide = narrow.repartition(dp + 4, "src")
+    wide = narrow.repartition(dp + 4, "src").persist()
     assert widen_narrow_input(wide, "src") is wide
+    wide.unpersist()
+    narrow.unpersist()

@@ -4,9 +4,12 @@ session width."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from graph500_spark.functions.sizing import (
     derived_partitions,
     resolve_shuffle_partitions,
+    widen_narrow_input,
 )
 
 
@@ -70,3 +73,25 @@ def test_bfs_auto_matches_explicit(spark):
     )
     clean.unpersist()
     assert a == b
+
+
+def test_widen_without_probe_starts_no_job(spark):
+    """A width probe must never re-run a shuffle: with no ``probe``,
+    an uncached plan with an exchange is returned untouched, and no
+    Spark job starts (under AQE, reading its width would execute the
+    exchange)."""
+    df = (
+        spark.range(1000)
+        .select((F.col("id") % 7).alias("src"), F.col("id").alias("dst"))
+        .groupBy("src")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    sc = spark.sparkContext
+    saved = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup("widen-no-probe", "widen_narrow_input width probe")
+    try:
+        out = widen_narrow_input(df, "src")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", saved)
+    assert sc.statusTracker().getJobIdsForGroup("widen-no-probe") == []
+    assert out is df

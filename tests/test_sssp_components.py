@@ -212,15 +212,18 @@ class TestBetweennessSampled:
         # endpoints: reached by the other root with δ = 0
         assert out[1] == 0 and out[4] == 0
 
-    def test_rejoin_fallback_matches_tree_pairs(self, spark):
-        # broadcast_rows=0 leaves the broadcast regime at the first
+    def test_rejoin_fallback_matches_tree_pairs(self, spark, monkeypatch):
+        # a zero threshold leaves the broadcast regime at the first
         # level: the backward pass re-joins the edge table instead of
         # reusing the forward pass's tree pairs — same integer sums
+        from graph500_spark.functions import sizing
+
         diamond = [(1, 2), (1, 3), (2, 4), (3, 4)]
         for roots in ([1], [1, 4]):
-            assert self._bc(
-                spark, diamond, roots, broadcast_rows=0
-            ) == self._bc(spark, diamond, roots)
+            want = self._bc(spark, diamond, roots)
+            with monkeypatch.context() as m:
+                m.setattr(sizing, "BROADCAST_ROWS", 0)
+                assert self._bc(spark, diamond, roots) == want
 
 
 class TestKatzCentrality:
