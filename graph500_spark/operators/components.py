@@ -141,10 +141,8 @@ def connected_components_stars(
                 n_new == n_edges
                 and new_E.exceptAll(E).limit(1).count() == 0
             )
-            old = E
             E = new_E
             n_edges = n_new
-            old.unpersist()
             if stable:
                 break
         # star forest: each leaf edge is (leaf, center); centers (and

@@ -114,14 +114,9 @@ def hits(
             hub = half_step(auth, out_edges=True)
             if last:
                 hub = hub.transform(truncate_plan_for, n)
-            prev_auth = auth
             auth = half_step(
                 hub, out_edges=False, scale=iter_scale
             ).transform(truncate_plan_for, n)
-            # Safe to drop: mid-loop the lazy hub tree referencing it is
-            # superseded next iteration; on the last iteration hub was
-            # checkpointed above, truncating its lineage.
-            prev_auth.unpersist()
 
         h_total = hub.agg(F.sum("score").alias("h_total"))
         a_total = auth.agg(F.sum("score").alias("a_total"))

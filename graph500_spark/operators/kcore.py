@@ -73,10 +73,11 @@ def k_core(
             # lazy checkpoint + count = one driver barrier per round
             .transform(truncate_plan_lazy)
         )
-        old = edges
+        # no unpersist of the superseded set: in round 1 it is the
+        # caller's plan (possibly cached), later a checkpoint leaf that
+        # rebinding releases (functions/plantrunc.py)
         edges = new_edges
         n_edges = edges.count()
-        old.unpersist()
 
     return edges.groupBy(F.col("src").alias("vertex")).agg(
         F.count(F.lit(1)).alias("degree")
@@ -101,8 +102,8 @@ def core_numbers(
     max(min(c_nbr, rank)) over a desc-ordered window — one exchange
     on vertex, the same single-exchange window shape every per-key
     top-k here uses. State is localCheckpoint'ed per round and the
-    superseded leaf unpersisted (lineage discipline of every loop in
-    this engine); all joins hang off checkpoint leaves or the edge
+    superseded leaf released by rebinding (lineage discipline of every
+    loop in this engine); all joins hang off checkpoint leaves or the edge
     cache — never off a shared shuffled sub-plan (the Spark 4.1 + AQE
     iterative-diamond pathology documented in PLANS.md round 5).
 
@@ -162,9 +163,7 @@ def core_numbers(
             changed = new_c.agg(
                 F.sum(F.col("chg").cast("long")).alias("n")
             ).first()["n"]
-            old = c
             c = new_c.select("vertex", "c")
-            old.unpersist()
             if changed == 0:
                 break
     return c.select("vertex", F.col("c").alias("coreness"))

@@ -5,165 +5,91 @@ and declares the SSSP entry point but leaves it empty
 (/root/reference/mpi/bfs.hpp:2569-2571, ``run_sssp { }``) — this module
 supplies the capability the reference stubs out, Spark-first.
 
-Algorithm: iterated relaxation (Bellman-Ford rounds) with a *delta
-frontier* — only vertices whose (dist, pred) entry improved in the
-previous round propose relaxations in the next, so per-round work is
-proportional to the changing set, not the whole graph (the DataFrame
-analog of delta-stepping's request generation).
-
-Determinism: the tentative entry per vertex is the lexicographic
-minimum of (dist, pred) structs, so the final tree is unique:
-dist(v) is the true shortest distance and pred(v) = min{u :
-dist(u) + w(u,v) = dist(v)} — an oracle-checkable property (the
-queries registry pairs this with a DuckDB recursive-CTE oracle).
-
-Scale notes: per-round plan is one join (frontier is broadcast while
-small — driver-known counts, same strategy as operators/bfs.py) + one
-groupBy(vertex) min-aggregation; the dist table is re-merged by a
-union + min-agg, one shuffle on vertex. ``localCheckpoint`` truncates
-the per-round lineage. Rounds ≤ hop-diameter of the shortest-path
+Algorithm: Bellman-Ford relaxation as a vertex program on the one
+fixpoint loop, ``operators/pregel.py::pregel``, over the state
+[*key, vertex, dist, pred]. Each superstep sends
+``struct(dist + weight, src)`` along every edge to ``dst``, merges a
+vertex's inbox with ``min``, and applies a full join of the old state
+with the inbox that keeps ``least(struct(dist, pred), msg)``; ``chg``
+is true where that struct changed or the vertex is new. The merge is
+idempotent and the apply monotone, so only the vertices that changed
+in the previous superstep send (``active_only``, GraphX's active set:
+per-superstep work follows the changing set, as in delta-stepping),
+and the loop stops at the first superstep that changes nothing or
+after ``max_rounds``. Supersteps ≤ hop-diameter of the shortest-path
 tree (weights ≥ 1 ⇒ finite).
 
-One round loop, ``_sssp_rounds``, serves both entry points. Its ``key``
-list names the columns that tell independent trees apart: ``[]`` for
-single-source ``sssp`` (state keyed by vertex alone) and ``["source"]``
-for batched ``sssp_multi`` (state keyed by (source, vertex), so the
-trees share each round's job but never interact). Every join and
-merge runs on ``[*key, "vertex"]``, so the single-source plan carries
-no constant key column.
+Determinism: the entry per vertex is the lexicographic minimum of
+(dist, pred) structs, so the final tree is unique: dist(v) is the
+true shortest distance and pred(v) = min{u : dist(u) + w(u,v) =
+dist(v)} — an oracle-checkable property (the queries registry pairs
+this with a DuckDB recursive-CTE oracle).
+
+The ``key`` list names the columns that tell independent trees apart:
+``[]`` for single-source ``sssp`` and ``["source"]`` for batched
+``sssp_multi``, whose trees share each superstep's job but never
+interact. The inbox groups and the apply joins on ``[*key, "vertex"]``,
+so the single-source plan carries no constant key column.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from graph500_spark.functions.confscope import scoped_session_confs
-from graph500_spark.functions.plantrunc import truncate_plan_lazy
-from graph500_spark.functions.sizing import (
-    broadcast_if_fits,
-    resolve_shuffle_partitions,
-)
+from graph500_spark.operators.pregel import pregel
 from graph500_spark.operators.validate import violation_summary
 
-DIST_SCHEMA = T.StructType(
-    [
-        T.StructField("vertex", T.LongType(), False),
-        T.StructField("dist", T.LongType(), True),
-        T.StructField("pred", T.LongType(), True),
-    ]
-)
 
-
-def _sssp_rounds(
+def _relax(
     spark: SparkSession,
     edges_weighted: DataFrame,
     seeds: list[tuple],
-    schema: T.StructType | str,
     key: list[str],
     max_rounds: int | None,
     shuffle_partitions: int | str | None,
     edge_count: int | None,
 ) -> DataFrame:
-    """The delta-frontier relaxation loop behind ``sssp`` and
-    ``sssp_multi``: ``seeds`` are the dist-0 rows in ``schema`` order,
-    ``key`` the tree-identifying columns (module docstring). Returns
-    the final [*key, vertex, dist, pred] state, a checkpoint leaf."""
+    """The vertex program behind ``sssp`` and ``sssp_multi`` (module
+    docstring): ``seeds`` are the dist-0 rows (*key, vertex, dist,
+    pred). Returns the final state, a checkpoint leaf."""
     cols = [*key, "vertex"]
-    edges = edges_weighted.select("src", "dst", "weight")
 
-    # volume-derived default ("auto", functions/sizing.py): the edge
-    # table is NOT persisted here, so auto engages only when the
-    # caller supplies edge_count — never a scan over unpersisted
-    # lineage just to size shuffles.
-    sp_override = resolve_shuffle_partitions(
-        spark, shuffle_partitions, edge_count
-    )
-    with scoped_session_confs(
-        spark, {"spark.sql.shuffle.partitions": sp_override}
-    ):
-        dist = spark.createDataFrame(seeds, schema=schema).transform(
-            truncate_plan_lazy
+    def send(j: DataFrame) -> DataFrame:
+        return j.select(
+            *key,
+            F.col("dst").alias("vertex"),
+            F.struct(
+                (F.col("dist") + F.col("weight")).alias("dist"),
+                F.col("src").alias("pred"),
+            ).alias("msg"),
         )
-        frontier = dist
-        n_frontier = len(seeds)
-        rounds = 0
-        try:
-            while max_rounds is None or rounds < max_rounds:
-                rounds += 1
-                f_side = broadcast_if_fits(
-                    frontier.select(
-                        *key,
-                        F.col("vertex").alias("src"),
-                        F.col("dist").alias("f_dist"),
-                    ),
-                    n_frontier,
-                )
-                proposals = edges.join(f_side, "src").select(
-                    *key,
-                    F.col("dst").alias("vertex"),
-                    (F.col("f_dist") + F.col("weight")).alias("dist"),
-                    F.col("src").alias("pred"),
-                )
-                # merge: per vertex keep the lexicographic-min (dist,
-                # pred). The checkpoint makes the state a LEAF plan —
-                # the next round references it twice (union +
-                # improvement join), so anything short of truncation
-                # grows the plan tree exponentially with round count.
-                # LAZY: the improved.count below materializes merged
-                # AND improved in ONE job — one driver barrier per
-                # round instead of two (guide §1.2/§5).
-                merged = (
-                    dist.unionByName(proposals)
-                    .groupBy(*cols)
-                    .agg(F.min(F.struct("dist", "pred")).alias("best"))
-                    .select(
-                        *cols,
-                        F.col("best.dist").alias("dist"),
-                        F.col("best.pred").alias("pred"),
-                    )
-                    .transform(truncate_plan_lazy)
-                )
-                # improved = entries that changed this round (new
-                # vertex or struct-smaller entry) — the next frontier
-                old = dist.select(
-                    *cols,
-                    F.col("dist").alias("o_dist"),
-                    F.col("pred").alias("o_pred"),
-                )
-                improved = (
-                    merged.join(old, cols, "left")
-                    .filter(
-                        F.col("o_dist").isNull()
-                        | (F.col("dist") < F.col("o_dist"))
-                        | (
-                            (F.col("dist") == F.col("o_dist"))
-                            & (F.col("pred") < F.col("o_pred"))
-                        )
-                    )
-                    .select(*cols, "dist", "pred")
-                    .persist()  # shallow plan over two cached leaves
-                )
-                n_new = improved.count()
-                if n_new == 0:
-                    improved.unpersist()
-                    break
-                # the superseded round's blocks can be freed — without
-                # this, long loops accumulate O(rounds) cached state
-                old_dist, old_frontier = dist, frontier
-                dist = merged
-                frontier = improved
-                n_frontier = n_new
-                old_dist.unpersist()
-                if old_frontier is not old_dist:
-                    old_frontier.unpersist()
-        finally:
-            # the last frontier's blocks are dead on every exit path
-            # (n_new==0 break, max_rounds break, or an error) — without
-            # this each invocation leaks one persisted frontier
-            if frontier is not dist:
-                frontier.unpersist()
-    return dist
+
+    def apply_fn(old: DataFrame, inbox: DataFrame) -> DataFrame:
+        # NULL for a vertex only the inbox has: a struct of two nulls
+        # would sort below every message and win the least()
+        entry = F.when(F.col("dist").isNotNull(), F.struct("dist", "pred"))
+        best = F.least(entry, F.col("msg"))
+        return old.join(inbox, cols, "full").select(
+            *cols,
+            best["dist"].alias("dist"),
+            best["pred"].alias("pred"),
+            (entry.isNull() | (best != entry)).alias("chg"),
+        )
+
+    schema = ", ".join(f"{c} long" for c in [*cols, "dist", "pred"])
+    return pregel(
+        spark,
+        edges_weighted.select("src", "dst", "weight"),
+        spark.createDataFrame(seeds, schema),
+        send,
+        [F.min("msg").alias("msg")],
+        apply_fn,
+        n_supersteps=max_rounds,
+        active_only=True,
+        shuffle_partitions=shuffle_partitions,
+        edge_count=edge_count,
+        key=key,
+    )
 
 
 def sssp(
@@ -179,11 +105,10 @@ def sssp(
     [src, dst, weight] with integer weights ≥ 1, already symmetrized
     if undirected semantics are wanted.
     """
-    return _sssp_rounds(
+    return _relax(
         spark,
         edges_weighted,
         [(int(root), 0, int(root))],
-        DIST_SCHEMA,
         key=[],
         max_rounds=max_rounds,
         shuffle_partitions=shuffle_partitions,
@@ -200,24 +125,24 @@ def sssp_multi(
     edge_count: int | None = None,
 ) -> DataFrame:
     """[source, vertex, dist, pred] — k shortest-path trees through
-    ONE shared delta-frontier loop: the operators/bfs.py::bfs_multi
+    ONE shared superstep loop: the operators/bfs.py::bfs_multi
     batching applied to weighted relaxation. Per-root results are
     identical to sequential sssp() (the state is keyed by
     (source, vertex), so trees never interact); the win is the
-    reference's 64-root batching story — the per-round scheduling
+    reference's 64-root batching story — the per-superstep scheduling
     floor and the edge-table scan are paid once per BATCH, not once
     per root (the bench's bfs_s16 sequential-vs-batched pair measures
     that floor directly).
 
-    Scale shape per round: one frontier⋈edges equi-join on src (the
-    frontier broadcast while its TOTAL rows across sources stay under
-    the threshold — driver-known counts) + one (source, vertex)
-    min-struct merge with map-side partials."""
-    return _sssp_rounds(
+    Scale shape per superstep: one active-set⋈edges equi-join on src
+    (the active set broadcast while its TOTAL rows across sources stay
+    under the threshold — driver-known counts), one (source, vertex)
+    min-struct merge with map-side partials, and the state⋈inbox full
+    join."""
+    return _relax(
         spark,
         edges_weighted,
         [(int(r), int(r), 0, int(r)) for r in roots],
-        "source long, vertex long, dist long, pred long",
         key=["source"],
         max_rounds=max_rounds,
         shuffle_partitions=shuffle_partitions,

@@ -11,35 +11,46 @@ import shutil
 
 import pytest
 from pyspark import StorageLevel
+from pyspark.sql import functions as F
 
 from graph500_spark.operators import centrality, components, kcore
-from graph500_spark.operators import pagerank, pregel, triangles
+from graph500_spark.operators import pagerank, pregel, sssp, triangles
 from graph500_spark.operators.graph_build import build_clean_edges
 from graph500_spark.functions.sizing import widen_narrow_input
 from graph500_spark.plans import queries as Q
 
 from tests.conftest import SF_SMALL
 
+# name -> (takes a [src, dst, weight] table, call)
 OPERATORS = {
-    "core_numbers": lambda spark, g: kcore.core_numbers(g),
-    "label_propagation": lambda spark, g: pregel.label_propagation(spark, g),
-    "pagerank": lambda spark, g: pagerank.pagerank(spark, g),
-    "katz_centrality": lambda spark, g: centrality.katz_centrality(spark, g),
-    "strongly_connected_components": lambda spark, g: (
+    "core_numbers": (False, lambda spark, g: kcore.core_numbers(g)),
+    "k_core": (False, lambda spark, g: kcore.k_core(g, 2)),
+    "label_propagation": (False, lambda spark, g: (
+        pregel.label_propagation(spark, g)
+    )),
+    "pagerank": (False, lambda spark, g: pagerank.pagerank(spark, g)),
+    "katz_centrality": (False, lambda spark, g: (
+        centrality.katz_centrality(spark, g)
+    )),
+    "strongly_connected_components": (False, lambda spark, g: (
         components.strongly_connected_components(spark, g)
-    ),
+    )),
+    "sssp": (True, lambda spark, g: sssp.sssp(spark, g, 0)),
+    "sssp_multi": (True, lambda spark, g: sssp.sssp_multi(spark, g, [0, 10])),
 }
 
 
 @pytest.mark.parametrize("op", sorted(OPERATORS))
 def test_operator_keeps_callers_cache(spark, op):
     pairs = [(0, 1), (1, 2), (2, 0), (2, 3), (10, 11)]
-    g = build_clean_edges(
-        spark.createDataFrame(pairs, "src long, dst long")
-    ).persist()
+    weighted, run = OPERATORS[op]
+    g = build_clean_edges(spark.createDataFrame(pairs, "src long, dst long"))
+    if weighted:
+        g = g.withColumn("weight", (F.col("src") + F.col("dst")) % 3 + 1)
+    g = g.persist()
     try:
         g.count()
-        OPERATORS[op](spark, g).collect()
+        run(spark, g).collect()
         assert g.storageLevel != StorageLevel.NONE, "caller's cache dropped"
     finally:
         g.unpersist()

@@ -14,35 +14,49 @@ from pyspark.sql import functions as F
 from graph500_spark.functions.confscope import scoped_session_confs
 from graph500_spark.operators import bfs as bfs_mod
 from graph500_spark.operators import components, kcore, pagerank, pregel
+from graph500_spark.operators import sssp
 
 KEY = "spark.sql.shuffle.partitions"
+EDGES = ("src", "dst")
+WEIGHTED = ("src", "dst", "weight")
 
 
-def _poisoned_edges(spark):
-    """A clean-looking edge list whose ``src`` fails on evaluation, so
-    the operator's first Spark job raises."""
-    rows = [(0, 1), (1, 0), (1, 2), (2, 1)]
-    return spark.createDataFrame(rows, "src long, dst long").select(
+def _poisoned_edges(spark, cols):
+    """A clean-looking edge list with columns ``cols`` whose ``src``
+    fails on evaluation, so the operator's first edge job raises."""
+    rows = [(0, 1, 1), (1, 0, 1), (1, 2, 2), (2, 1, 2)]
+    return spark.createDataFrame(
+        rows, "src long, dst long, weight long"
+    ).select(
         F.when(F.col("src") >= 0, F.raise_error(F.lit("injected fault")))
         .otherwise(F.col("src"))
         .cast("long")
         .alias("src"),
-        "dst",
+        *cols[1:],
     )
 
 
+# name -> (edge columns, call)
 OPERATORS = {
-    "connected_components": lambda spark, e: components.connected_components(
+    "connected_components": (EDGES, lambda spark, e: (
+        components.connected_components(spark, e, shuffle_partitions=3)
+    )),
+    "bfs": (EDGES, lambda spark, e: bfs_mod.bfs(
+        spark, e, 0, shuffle_partitions=3
+    )),
+    "label_propagation": (EDGES, lambda spark, e: pregel.label_propagation(
         spark, e, shuffle_partitions=3
-    ),
-    "bfs": lambda spark, e: bfs_mod.bfs(spark, e, 0, shuffle_partitions=3),
-    "label_propagation": lambda spark, e: pregel.label_propagation(
+    )),
+    "core_numbers": (EDGES, lambda spark, e: kcore.core_numbers(e)),
+    "pagerank": (EDGES, lambda spark, e: pagerank.pagerank(
         spark, e, shuffle_partitions=3
-    ),
-    "core_numbers": lambda spark, e: kcore.core_numbers(e),
-    "pagerank": lambda spark, e: pagerank.pagerank(
-        spark, e, shuffle_partitions=3
-    ),
+    )),
+    "sssp": (WEIGHTED, lambda spark, e: sssp.sssp(
+        spark, e, 0, shuffle_partitions=3
+    )),
+    "sssp_multi": (WEIGHTED, lambda spark, e: sssp.sssp_multi(
+        spark, e, [0, 2], shuffle_partitions=3
+    )),
 }
 
 
@@ -50,10 +64,11 @@ OPERATORS = {
 def test_failed_job_releases_conf_lock(spark, op):
     before = spark.conf.get(KEY)
     assert before != "3"
-    e = _poisoned_edges(spark)
+    cols, run = OPERATORS[op]
+    e = _poisoned_edges(spark, cols)
     with pytest.raises(Exception, match="injected fault"):
-        OPERATORS[op](spark, e)
-    assert e.select("src", "dst").storageLevel == StorageLevel.NONE
+        run(spark, e)
+    assert e.select(*cols).storageLevel == StorageLevel.NONE
 
     # The lock is an RLock, so re-entering it on this thread would
     # succeed even if it leaked: a second thread has to take it.

@@ -62,6 +62,52 @@ def test_sssp_matches_bfs_on_unit_weights(spark):
     assert d == {v: int(depth) for v, depth in b.items()}
 
 
+def _bellman_ford(rows, root, rounds):
+    """Driver-side synchronous Bellman-Ford: ``rounds`` relaxations of
+    every edge from the previous round's entries, keeping the
+    lexicographic-min (dist, pred) per vertex (None = to the fixpoint)."""
+    best = {root: (0, root)}
+    while rounds is None or rounds > 0:
+        nxt = dict(best)
+        for s, d, w in rows:
+            if s in best:
+                cand = (best[s][0] + w, s)
+                nxt[d] = min(nxt.get(d, cand), cand)
+        if nxt == best:
+            break
+        best = nxt
+        rounds = None if rounds is None else rounds - 1
+    return best
+
+
+def test_sssp_max_rounds_truncates_like_bellman_ford(spark):
+    """``max_rounds=2`` stops after two supersteps, with the same
+    entries a two-round Bellman-Ford with the (dist, pred) tie-break
+    holds, for the single-source and the batched entry point."""
+    from graph500_spark.operators.sssp import sssp_multi
+
+    rows = _sym(
+        [(i, (i * 7 + 3) % 30, (i * 13) % 9 + 1) for i in range(30)]
+        + [(i, (i + 1) % 30, (i * 5) % 4 + 1) for i in range(30)]
+    )
+    edges = _weighted(spark, rows)
+    roots = [0, 11]
+    for root in roots:
+        assert _bellman_ford(rows, root, 2) != _bellman_ford(rows, root, None)
+
+    out = sssp(spark, edges, roots[0], max_rounds=2)
+    got = {r["vertex"]: (r["dist"], r["pred"]) for r in out.collect()}
+    assert got == _bellman_ford(rows, roots[0], 2)
+
+    multi = sssp_multi(spark, edges, roots, max_rounds=2)
+    for root in roots:
+        got = {
+            r["vertex"]: (r["dist"], r["pred"])
+            for r in multi.filter(F.col("source") == root).collect()
+        }
+        assert got == _bellman_ford(rows, root, 2), f"source {root}"
+
+
 def test_validate_sssp_clean_and_corrupted(spark):
     from pyspark.sql import functions as F2
 

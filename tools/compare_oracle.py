@@ -11,6 +11,13 @@ their ok/fail counts are summed: one process running all 290 queries
 at sf0.01 grew to 6.3 GB RSS and was OOM-killed at query 257. Each
 child's counts are printed with its peak RSS (``ru_maxrss`` of the
 child Python process and the descendants it reaped).
+
+The DuckDB connection runs with ``DUCKDB_MEMORY_LIMIT`` and a private
+spill directory. Without a limit DuckDB 1.0 takes 80 % of host RAM
+(12.5 GiB on a 15 GiB host) and the oracle side of one child reached
+about 7.8 GB; with it, large oracle joins and aggregates spill to disk.
+At 2 GB the two louvain quality oracles still fail with DuckDB's
+out-of-memory error ("failed to pin block"), so the limit is 4 GB.
 """
 
 from __future__ import annotations
@@ -20,6 +27,7 @@ import os
 import re
 import subprocess
 import sys
+import tempfile
 from pathlib import Path
 
 import duckdb
@@ -27,6 +35,7 @@ import pandas as pd
 
 REPO = Path(__file__).resolve().parents[1]
 CHUNK = 50
+DUCKDB_MEMORY_LIMIT = "4GB"
 
 
 def value_hash(df: pd.DataFrame) -> str:
@@ -76,29 +85,8 @@ def sweep(sf_dir: str, names: list[str]) -> int:
     return 1 if n_fail else 0
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
-    sys.path.insert(0, str(REPO))
-    import __spark_entry__ as entrymod
-
-    if not only:
-        return sweep(sf_dir, list(entrymod.queries()))
-    from graph500_spark.session import get_spark
-
-    spark = get_spark(app_name="oracle-compare")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events"
-        " documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-
+def compare(spark, con, entrymod, sf_dir: str, only: set[str]) -> int:
+    """Run the ``only`` queries on Spark and their oracles on ``con``."""
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     n_pass = n_fail = 0
@@ -138,6 +126,40 @@ def main() -> int:
             n_pass += 1
     print(f"\n{n_pass} ok, {n_fail} fail")
     return 1 if n_fail else 0
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+
+    sys.path.insert(0, str(REPO))
+    import __spark_entry__ as entrymod
+
+    if not only:
+        return sweep(sf_dir, list(entrymod.queries()))
+    from graph500_spark.session import get_spark
+
+    spark = get_spark(app_name="oracle-compare")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    with tempfile.TemporaryDirectory(prefix="oracle-duckdb-") as spill:
+        con = duckdb.connect(
+            config={
+                "memory_limit": DUCKDB_MEMORY_LIMIT,
+                "temp_directory": spill,
+            }
+        )
+        try:
+            for t in (
+                "region nation customer supplier part orders lineitem events"
+                " documents embeddings".split()
+            ):
+                con.execute(
+                    f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+                )
+            return compare(spark, con, entrymod, sf_dir, only)
+        finally:
+            con.close()
 
 
 if __name__ == "__main__":
